@@ -2387,7 +2387,7 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         from time_series_loader_spark.operators.ln_pinned import ln_u_lookup
 
         vocab = (
-            toksed.select(F.explode("_toks").alias("term"))
+            shared.select(F.explode("_toks").alias("term"))
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("ct"))
             .collect()
@@ -2421,7 +2421,7 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # benign unless two adjacent order stats sit ~1 ulp apart with a
         # doc exactly at the upper one (margin canary in test_sampling).
         bnds0 = (
-            toksed.select(mean0.alias("_m"))
+            shared.select(mean0.alias("_m"))
             .agg(F.percentile("_m", F.lit([i / 10.0 for i in range(1, 10)])))
             .collect()[0][0]
         )

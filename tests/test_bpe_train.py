@@ -244,3 +244,20 @@ def test_trainer_randomized_dense_tie_corpora(spark):
             df, "text", n_merges=6, min_count=2, checkpoint_every=2
         )
         assert dist == seq_train(_word_freq(texts), 6), texts
+
+
+def test_reissued_lazy_checkpoint_raises_without_leaking(spark):
+    """A lazy key re-issued before settle() is refused BEFORE anything is
+    checkpointed: the failing call leaves no untracked persisted RDD."""
+    from time_series_loader_spark.functions.bpe import _CkptTracker
+
+    tracker = _CkptTracker(spark)
+    df = spark.range(10)
+    first = tracker.checkpoint(df, "k", eager=False)
+    first.count()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="re-issued before settle"):
+        tracker.checkpoint(df, "k", eager=False)
+    assert jsc.getPersistentRDDs().size() == before
+    tracker.release_prefix("k")

@@ -169,3 +169,30 @@ def test_flagship_corpus_filter_identical_under_both_forms(spark, monkeypatch):
     monkeypatch.setattr(decontam, "EXPR_FORM_MAX_NGRAMS", 0)
     forced = run()
     assert forced == base
+
+
+def test_multiline_benchmark_entry_matches_nothing(spark, corpus):
+    """A benchmark entry containing a newline can never equal a
+    whitespace-split shingle: the literal forms drop it instead of
+    raising, and count exactly as the list without it."""
+    from time_series_loader_spark.operators.decontam import strip_count_expr
+    from time_series_loader_spark.operators.text import tokens
+
+    docs, eval_q = corpus
+    clean = ngram_set([eval_q], n=8)
+    dirty = clean + ["what is the capital\nof france paris is"]
+    toked = docs.select("doc_id", tokens("text").alias("_toks"))
+
+    def counts(bench):
+        from time_series_loader_spark.operators.decontam import contamination_expr
+
+        return sorted(
+            toked.select(
+                "doc_id",
+                contamination_expr(F.col("_toks"), bench, n=8).alias("c"),
+                strip_count_expr(F.col("_toks"), bench, n=8).alias("s"),
+            ).collect()
+        )
+
+    assert counts(dirty) == counts(clean)
+    assert counts(["only\nentry"]) == counts(["no such eight gram anywhere in corpus"])

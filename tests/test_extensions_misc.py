@@ -128,6 +128,26 @@ class TestBuffers:
         ok, rejects = validate_buffers([("a.csv", b"x;y\n1;2\n"), ("e.csv", b"")])
         assert len(ok) == 1 and rejects == {"e.csv": "empty_content"}
 
+    def test_buffers_and_files_type_the_same_csv_alike(self, spark, tmp_path):
+        from time_series_loader_spark.plans.loader import TimeSeriesLoader
+
+        raw = b"ts;val\n2024-01-01 00:00:00;1,5\n2024-01-01 01:00:00;x\n"
+        p = tmp_path / "slice.csv"
+        p.write_bytes(raw)
+        loading = LoadingConfig(delimiter=";", decimal=",")
+        from_files = TimeSeriesLoader.from_files(
+            spark, [str(p)], loading=loading
+        ).initialize()
+        from_buffers = TimeSeriesLoader.from_buffers(
+            spark, [("slice.csv", raw)], loading=loading
+        )
+        # lineage columns differ on purpose (path vs buffer name); the
+        # data columns must not
+        data = ["ts", "val"]
+        assert from_files.select(data).dtypes == from_buffers.select(data).dtypes
+        assert from_files.select(data).collect() == from_buffers.select(data).collect()
+        assert from_buffers.select(data).collect()[0] == (datetime(2024, 1, 1), 1.5)
+
     def test_schema_freeze_across_buffers(self, spark):
         from time_series_loader_spark.sources.memory import load_buffers
 

@@ -46,6 +46,37 @@ def test_resample_methods_match_pandas(spark, hourly_df, method):
         assert out[ts.to_pydatetime()] == pytest.approx(v)
 
 
+@pytest.mark.parametrize("method", ["mean", "sum", "first", "last", "min", "max", "count"])
+def test_resample_nan_input_matches_pandas(spark, method):
+    # the same hourly series with NaN and null planted: pandas treats both
+    # as missing, so they must leave every aggregate (and the mean's count)
+    values = [float(i) for i in range(25)]
+    values[5] = float("nan")
+    values[9] = None
+    rows = [(datetime(2023, 1, 1) + timedelta(hours=i), v) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "timestamp TIMESTAMP, value DOUBLE")
+    out = {
+        r["timestamp"]: r["value"]
+        for r in resample(df, "timestamp", "4h", method=method).collect()
+    }
+    pdf = pd.DataFrame(
+        {"value": [float("nan") if v is None else v for v in values]},
+        index=pd.date_range("2023-01-01", periods=25, freq="h"),
+    )
+    expected = getattr(pdf.resample("4h"), method)()
+    for ts, v in expected["value"].items():
+        assert out[ts.to_pydatetime()] == pytest.approx(v)
+    if method in ("mean", "sum"):
+        # skipna=False: a NaN in the bucket nulls it, like a null does
+        strict = {
+            r["timestamp"]: r["value"]
+            for r in resample(df, "timestamp", "4h", method=method, skipna=False).collect()
+        }
+        assert strict[datetime(2023, 1, 1, 4)] is None
+        assert strict[datetime(2023, 1, 1, 8)] is None
+        assert strict[datetime(2023, 1, 1, 0)] == pytest.approx(expected["value"].iloc[0])
+
+
 def test_resample_invalid_method(spark, hourly_df):
     with pytest.raises(ValueError, match="invalid resample method"):
         resample(hourly_df, "timestamp", "1h", method="mode")

@@ -302,6 +302,10 @@ class _CkptTracker:
         self._pending: dict[str, list] = {}
 
     def checkpoint(self, df: DataFrame, key: str, eager: bool = True) -> DataFrame:
+        # refuse a re-issued lazy key BEFORE checkpointing: raising after
+        # localCheckpoint() would leave its persisted RDD untracked
+        if not eager and key in self._pending:
+            raise RuntimeError(f"lazy checkpoint {key!r} re-issued before settle()")
         before = {r.id() for r in self._jsc.getPersistentRDDs().values()}
         out = df.localCheckpoint(eager=eager)
         # scope the diff to OUR checkpoint's RDD where the plan exposes
@@ -332,10 +336,6 @@ class _CkptTracker:
             # compute chain may read the predecessor's blocks until the
             # first action materializes it — caller invokes settle(key)
             # after that action (r15)
-            if key in self._pending:
-                raise RuntimeError(
-                    f"lazy checkpoint {key!r} re-issued before settle()"
-                )
             self._pending[key] = new
             return out
         for rdd in self._generations.get(key, []):

@@ -18,8 +18,8 @@ Spark lacks a native as-of join. This is the union-of-timelines composition
 
 Cost: one sort over targets+data — O((n+m) log p) distributed vs the
 reference's O(n·m) loop. Keyed input partitions by the series key; UNKEYED
-input is bucketed by deterministic time ranges with tiny prefix-scanned
-carry tables for the bucket-boundary neighbors (same scheme as fill.py) —
+input is bucketed by deterministic time ranges (``functions/bucketing.py``)
+with tiny prefix-scanned carry tables for the bucket-boundary neighbors —
 no single-partition funnel.
 """
 
@@ -30,7 +30,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_bucket_column, time_span
+from time_series_loader_spark.functions.bucketing import time_buckets
 
 
 def _pick(
@@ -160,9 +160,20 @@ def asof_nearest(
     # (O(rows)). Costs one extra local sort in the same exchange.
     order_rev = [F.col(ts_col).desc(), F.col("_is_target").desc()]
 
-    if gcols:
-        w = Window.partitionBy(*gcols).orderBy(*order)
-        w_rev = Window.partitionBy(*gcols).orderBy(*order_rev)
+    # unkeyed: deterministic time buckets + boundary carries; keyed (or
+    # degenerate unkeyed) input runs the plain window
+    bucketed = None if gcols else time_buckets(u, ts_col, num_buckets)
+    if bucketed is None:
+        w = (
+            Window.partitionBy(*gcols).orderBy(*order)
+            if gcols
+            else Window.orderBy(*order)
+        )
+        w_rev = (
+            Window.partitionBy(*gcols).orderBy(*order_rev)
+            if gcols
+            else Window.orderBy(*order_rev)
+        )
         enriched = u.select(
             *u.columns,
             F.last(row_struct, ignorenulls=True)
@@ -174,26 +185,6 @@ def asof_nearest(
         ).where(F.col("_is_target") == 1)
         return _pick(enriched, ts_col, value_cols, gcols, direction, tolerance_seconds)
 
-    # unkeyed: deterministic time buckets + boundary carries
-    spark = u.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    lo, hi = time_span(u, ts_col)
-    if lo is None or hi is None or hi <= lo or n <= 1:
-        w = Window.orderBy(*order)
-        w_rev = Window.orderBy(*order_rev)
-        enriched = u.select(
-            *u.columns,
-            F.last(row_struct, ignorenulls=True)
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("_prev"),
-            F.last(row_struct, ignorenulls=True)
-            .over(w_rev.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("_next"),
-        ).where(F.col("_is_target") == 1)
-        return _pick(enriched, ts_col, value_cols, (), direction, tolerance_seconds)
-
-    span = hi - lo
-    bucketed = u.withColumn("_pid", time_bucket_column(ts_col, lo, span, n))
     w = Window.partitionBy("_pid").orderBy(*order)
     w_rev = Window.partitionBy("_pid").orderBy(*order_rev)
 
@@ -221,6 +212,7 @@ def asof_nearest(
     struct_ddl = "STRUCT<_ts: TIMESTAMP, " + ", ".join(
         f"{c}: {dict(data.dtypes)[c]}" for c in value_cols
     ) + ">"
+    spark = u.sparkSession
     pc = spark.createDataFrame(
         [(pid, tuple(s) if s is not None else None) for pid, s in prev_carry],
         f"_pid INT, _pcarry {struct_ddl}",

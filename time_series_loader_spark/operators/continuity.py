@@ -8,12 +8,12 @@ Parity targets (reference ``load_file.py:2024-2125``):
   ``load_file.py:2063-2074``)
 - A3 continuity statistics (``load_file.py:2094-2111``)
 
-Spark-first notes: one ``Window.orderBy(ts)`` pass computes the lag/diff.
-An unkeyed window is a single-partition sort — correct for the reference's
-one-global-timeline model but a bottleneck at 100 TB, so every function
-takes ``group_cols`` (series key) to partition the window; with a key the
-plan is a standard hash-partitioned window, no global funnel
-(SURVEY.md §7 hard-part (d)).
+Spark-first notes: one lag pass computes the previous timestamp. Every
+function takes ``group_cols`` (series key) to partition the window; with
+a key the plan is a standard hash-partitioned window (SURVEY.md §7
+hard-part (d)). Unkeyed input (the reference's one-global-timeline model)
+is spread over deterministic time buckets with a boundary carry
+(``functions/bucketing.py``), so it never funnels through one partition.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_loader_spark.functions.bucketing import shift_in_time
 from time_series_loader_spark.functions.frequency import freq_to_seconds
 
 
@@ -36,63 +37,45 @@ def _freq_float(freq: str | int | float) -> float:
     return float(freq_to_seconds(freq))
 
 
-def _w(group_cols: Sequence[str], ts_col: str) -> Window:
-    w = Window.orderBy(ts_col)
-    if group_cols:
-        w = Window.partitionBy(*group_cols).orderBy(ts_col)
-    return w
-
-
 def _with_prev_ts(
     df: DataFrame,
     ts_col: str,
     group_cols: Sequence[str],
     num_buckets: int | None = None,
 ) -> DataFrame:
-    """Add ``_prev_ts`` = the previous row's timestamp in global time order.
-
-    Keyed input: plain lag window partitioned by the series key.
-
-    Unkeyed input (the reference's one-global-timeline model) does NOT
-    funnel through one partition: rows are bucketed by a DETERMINISTIC
-    value-based time range (pure function of ts — no sampling, so repeated
-    subtree evaluations agree), lag runs per bucket, and the per-bucket
-    boundary rows take their predecessor from a broadcast (bucket →
-    previous bucket's max ts) table built by a cheap map-side aggregate.
-    Cost: two extra lightweight agg scans; benefit: the sort is
-    hash-distributed over ``num_buckets`` partitions instead of one.
-    """
-    if group_cols:
-        w = Window.partitionBy(*group_cols).orderBy(ts_col)
-        return df.withColumn("_prev_ts", F.lag(ts_col).over(w))
-
-    from time_series_loader_spark.functions.bucketing import (
-        time_bucket_column,
-        time_span,
+    """Add ``_prev_ts`` = the previous row's timestamp in time order
+    (keyed, or bucketed over the global timeline — functions/bucketing.py)."""
+    return shift_in_time(
+        df, ts_col, ts_col, "_prev_ts", group_cols=group_cols, num_buckets=num_buckets
     )
 
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    lo, hi = time_span(df, ts_col)
-    if lo is None or hi is None or hi <= lo or n <= 1:
-        w = Window.orderBy(ts_col)
-        return df.withColumn("_prev_ts", F.lag(ts_col).over(w))
-    # integer-µs bucketing (functions/bucketing.py): routing only —
-    # results are bucketing-invariant via the boundary carry below
-    bucketed = df.withColumn("_pid", time_bucket_column(ts_col, lo, hi - lo, n))
-    # bounds from the PRE-window frame: a map-side-combined agg over
-    # (pid, ts) — computing it from the windowed frame would force the
-    # expensive sort to evaluate twice
-    bounds = bucketed.groupBy("_pid").agg(F.max(ts_col).alias("_pmax"))
-    w_b = Window.orderBy("_pid")  # n rows — trivially single-partition
-    boundary = bounds.select("_pid", F.lag("_pmax").over(w_b).alias("_boundary_prev"))
 
-    w_local = Window.partitionBy("_pid").orderBy(ts_col)
-    windowed = bucketed.withColumn("_local_prev", F.lag(ts_col).over(w_local))
-    return (
-        windowed.join(F.broadcast(boundary), "_pid", "left")
-        .withColumn("_prev_ts", F.coalesce("_local_prev", "_boundary_prev"))
-        .drop("_pid", "_local_prev", "_boundary_prev")
+def _median_us2(dd: DataFrame, group_cols: Sequence[str]) -> DataFrame:
+    """(group_cols..., ``freq_us_x2``) from the delta distribution ``dd``
+    = (group_cols..., ``_du``, ``_c`` count): the sum of the two middle
+    order statistics — see :func:`infer_frequency_us2`."""
+    w = (
+        Window.partitionBy(*group_cols).orderBy("_du")
+        if group_cols
+        else Window.orderBy("_du")
+    )
+    cum = dd.select(
+        *group_cols,
+        "_du",
+        F.sum("_c").over(w).alias("_hi"),
+        F.sum("_c").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("_n"),
+    )
+    # ranks of the two middle order statistics, 1-indexed: (n+1) div 2
+    # and (n+2) div 2 — integer division, exact
+    r1 = F.expr("(_n + 1) div 2")
+    r2 = F.expr("(_n + 2) div 2")
+    lo = F.min(F.when(F.col("_hi") >= r1, F.col("_du"))).alias("_lo")
+    hi = F.min(F.when(F.col("_hi") >= r2, F.col("_du"))).alias("_hi2")
+    agg = cum.groupBy(*group_cols).agg(lo, hi) if group_cols else cum.agg(lo, hi)
+    return agg.select(
+        *group_cols, (F.col("_lo") + F.col("_hi2")).cast("long").alias("freq_us_x2")
     )
 
 
@@ -260,29 +243,7 @@ def infer_frequency_us2(
         F.col("_du").isNotNull()
     )
     dd = deltas.groupBy(*group_cols, "_du").agg(F.count(F.lit(1)).alias("_c"))
-    w = (
-        Window.partitionBy(*group_cols).orderBy("_du")
-        if group_cols
-        else Window.orderBy("_du")
-    )
-    cum = dd.select(
-        *group_cols,
-        "_du",
-        F.sum("_c").over(w).alias("_hi"),
-        F.sum("_c").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("_n"),
-    )
-    # ranks of the two middle order statistics, 1-indexed: (n+1) div 2
-    # and (n+2) div 2 — integer division, exact
-    r1 = F.expr("(_n + 1) div 2")
-    r2 = F.expr("(_n + 2) div 2")
-    lo = F.min(F.when(F.col("_hi") >= r1, F.col("_du"))).alias("_lo")
-    hi = F.min(F.when(F.col("_hi") >= r2, F.col("_du"))).alias("_hi2")
-    agg = cum.groupBy(*group_cols).agg(lo, hi) if group_cols else cum.agg(lo, hi)
-    return agg.select(
-        *group_cols, (F.col("_lo") + F.col("_hi2")).cast("long").alias("freq_us_x2")
-    )
+    return _median_us2(dd, group_cols)
 
 
 def continuity_stats_exact(
@@ -340,29 +301,7 @@ def continuity_stats_exact(
         )
         # exact doubled-median from dd — infer_frequency_us2's order
         # statistics, computed over the already-built distribution
-        w = (
-            Window.partitionBy(*group_cols).orderBy("_du")
-            if group_cols
-            else Window.orderBy("_du")
-        )
-        cum = dd.select(
-            *group_cols,
-            "_du",
-            "_c",
-            F.sum("_c").over(w).alias("_hi"),
-            F.sum("_c")
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-            .alias("_n"),
-        )
-        r1 = F.expr("(_n + 1) div 2")
-        r2 = F.expr("(_n + 2) div 2")
-        lo = F.min(F.when(F.col("_hi") >= r1, F.col("_du"))).alias("_lo")
-        hi = F.min(F.when(F.col("_hi") >= r2, F.col("_du"))).alias("_hi2")
-        magg = cum.groupBy(*group_cols).agg(lo, hi) if group_cols else cum.agg(lo, hi)
-        med = magg.select(
-            *group_cols,
-            (F.col("_lo") + F.col("_hi2")).cast("long").alias("freq_us_x2"),
-        )
+        med = _median_us2(dd, group_cols)
         ddm = (
             dd.join(F.broadcast(med), list(group_cols))
             if group_cols

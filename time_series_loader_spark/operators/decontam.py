@@ -55,10 +55,13 @@ def _lit_str_array(values: Sequence[str]):
     collision-free as the separator: callers pass whitespace-tokenized
     words or space-joined n-grams, and ``text.tokens`` splits on ``\\s``
     runs, so no token can contain a newline (the ``lm_lit`` str_to_map
-    precedent in q_corpus_filter)."""
-    if any("\n" in v for v in values):
-        raise ValueError("literal array value contains the \\n separator")
-    return F.split(F.lit("\n".join(values)), "\n", -1)
+    precedent in q_corpus_filter). An entry containing ``\\n`` can never
+    equal a token or a space-joined n-gram, so it is dropped: it could
+    match nothing."""
+    kept = [v for v in values if "\n" not in v]
+    if not kept:
+        return F.array().cast("array<string>")
+    return F.split(F.lit("\n".join(kept)), "\n", -1)
 
 
 def ngram_set(texts: Iterable[str | None], n: int = 8) -> list[str]:

@@ -29,8 +29,8 @@ single invariant does two jobs:
 Scale shape: with ``group_cols`` everything hash-partitions by the
 series key (two window exchanges: (key) for row positions, (key, block)
 for the scaled prefix; the block-summary join reuses the second).
-WITHOUT a key, the same discipline as operators/fill.py: deterministic
-time-bucketing, per-bucket local computation, and a driver-scanned
+WITHOUT a key, the rows are spread over deterministic time buckets
+(``functions/bucketing.py``), computed per bucket, and a driver-scanned
 carry table (one row per bucket) stitches bucket boundaries with the
 EXACT recursion carry_b = end_{b-1} + (1-α)^{cnt_{b-1}}·carry_{b-1}
 (buckets can be shorter than L, so their carry is NOT negligible —
@@ -54,7 +54,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_bucket_column, time_span
+from time_series_loader_spark.functions.bucketing import time_buckets
 
 
 def _block_len(alpha: float) -> int:
@@ -172,21 +172,16 @@ def _ewm_unkeyed(
     num_buckets: int | None,
 ) -> DataFrame:
     """Unkeyed global-timeline EWMA: time buckets + driver-scanned carry
-    table (one row per bucket), mirroring operators/fill.py."""
-    spark = df.sparkSession
+    table (one row per bucket) — see functions/bucketing.py."""
     q = 1.0 - alpha
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    lo, hi = time_span(df, ts_col)
-    if lo is None or hi is None or hi <= lo or n <= 1:
+    bucketed = time_buckets(df, ts_col, num_buckets)
+    if bucketed is None:
         # degenerate input: single-partition fallback (tiny by definition)
         out = _with_local_ewm(
             df.withColumn("_pid", F.lit(0)), ts_col, value_col, alpha, ["_pid"]
         )
         return _finish_unkeyed_degenerate(out, value_col, alpha, adjust, name)
 
-    bucketed = df.withColumn(
-        "_pid", time_bucket_column(ts_col, lo, hi - lo, n)
-    )
     local = _with_local_ewm(bucketed, ts_col, value_col, alpha, ["_pid"])
 
     # per-bucket stats: row count, bucket-end num/den (intra-bucket carry
@@ -200,8 +195,7 @@ def _ewm_unkeyed(
     )
     rows = sorted(stats.collect(), key=lambda rr: rr["_pid"])
     # driver prefix scan — EXACT recursion (buckets may be short, so
-    # cross-bucket decay (1-α)^{cnt} is not negligible): one row per
-    # bucket, same scale posture as fill.py's carry table
+    # cross-bucket decay (1-α)^{cnt} is not negligible): one row per bucket
     carry_rows, cn, cd, cum, cumnn = [], 0.0, 0.0, 0, 0
     x0g = rows[0]["_x0"] if rows else None
     for rr in rows:
@@ -211,7 +205,7 @@ def _ewm_unkeyed(
         cd = (rr["_ed"] or 0.0) + dec * cd
         cum += rr["_cnt"]
         cumnn += rr["_nnb"]
-    carry = spark.createDataFrame(
+    carry = df.sparkSession.createDataFrame(
         carry_rows,
         "_pid INT, _cn DOUBLE, _cd DOUBLE, _qcum DOUBLE, _cumprev BIGINT, _cumnn BIGINT",
     )

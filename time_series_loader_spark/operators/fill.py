@@ -27,7 +27,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_bucket_column, time_span
+from time_series_loader_spark.functions.bucketing import time_buckets
 
 
 def _single_partition_fill(
@@ -77,14 +77,9 @@ def _distributed_fill(
 ) -> Optional[DataFrame]:
     """Unkeyed fill over time buckets + cross-bucket carry. Returns None
     when the input is degenerate (empty / zero span) — caller falls back."""
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    lo, hi = time_span(df, ts_col)
-    if lo is None or hi is None or hi <= lo or n <= 1:
+    bucketed = time_buckets(df, ts_col, num_buckets)
+    if bucketed is None:
         return None
-    span = hi - lo
-
-    bucketed = df.withColumn("_pid", time_bucket_column(ts_col, lo, span, n))
     order = F.col(ts_col).desc() if backward else F.col(ts_col).asc()
     w_local = Window.partitionBy("_pid").orderBy(order)
     w_prec = w_local.rowsBetween(Window.unboundedPreceding, 0)
@@ -163,7 +158,7 @@ def _distributed_fill(
         + ", "
         + ", ".join(f"_cdist_{c} BIGINT" for c in cols)
     )
-    carry_df = spark.createDataFrame(carry_rows, schema)
+    carry_df = df.sparkSession.createDataFrame(carry_rows, schema)
 
     out = bucketed.join(F.broadcast(carry_df), "_pid", "left")
     rn = F.row_number().over(w_local)

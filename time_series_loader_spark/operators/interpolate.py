@@ -16,9 +16,9 @@ pandas `interpolate` edge semantics matched:
 - ``limit=n`` fills only the first n nulls of each run.
 
 Scale: keyed input partitions by the series key. Unkeyed input uses the
-same deterministic time-bucket scheme as fill.py: per-bucket windows plus
-TWO tiny carry tables — previous neighbor scanned low→high buckets, next
-neighbor scanned high→low — so no single-partition funnel.
+deterministic time buckets of ``functions/bucketing.py``: per-bucket
+windows plus TWO tiny carry tables — previous neighbor scanned low→high
+buckets, next neighbor scanned high→low — so no single-partition funnel.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_bucket_column, time_span
+from time_series_loader_spark.functions.bucketing import time_buckets
 
 
 def _interp_expr(c, ts_col, pv, pt, nv, nt, limit, dist):
@@ -98,14 +98,9 @@ def _distributed_interpolate(
     limit: int | None,
     num_buckets: int | None,
 ) -> Optional[DataFrame]:
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    lo, hi = time_span(df, ts_col)
-    if lo is None or hi is None or hi <= lo or n <= 1:
+    bucketed = time_buckets(df, ts_col, num_buckets)
+    if bucketed is None:
         return None
-    span = hi - lo
-
-    bucketed = df.withColumn("_pid", time_bucket_column(ts_col, lo, span, n))
     w = Window.partitionBy("_pid").orderBy(ts_col)
     # reversed-order running frame instead of (1, unboundedFollowing) —
     # same row, O(rows) instead of O(rows²) per bucket (see the
@@ -201,6 +196,7 @@ def _distributed_interpolate(
         + ", "
         + ", ".join(f"_nct_{c} TIMESTAMP" for c in cols)
     )
+    spark = df.sparkSession
     prev_df = spark.createDataFrame(prev_carry, prev_schema)
     next_df = spark.createDataFrame(next_carry, next_schema)
 

@@ -15,11 +15,10 @@ extrapolation — that is a presentation choice layered on top, not an
 aggregation property).
 
 Scale shape: keyed series hash-partition by key (one lag window + one
-groupBy, both on the key). Unkeyed input follows the fill.py/
-continuity.py discipline — deterministic time buckets, local lag per
-bucket, and a broadcast (bucket → previous bucket's last sample) table
-stitches boundaries; never a single-partition window. Sums accumulate
-in DECIMAL (the house rule: partition-order-independent).
+groupBy, both on the key). Unkeyed input takes the previous sample from
+``functions/bucketing.py::shift_in_time`` (time buckets + boundary
+carry) — never a single-partition window. Sums accumulate in DECIMAL
+(the house rule: partition-order-independent).
 
 Numeric discipline (round-6 hardening): counter readings are quantized
 to DECIMAL(27,6) *before* any comparison or subtraction, so every
@@ -38,46 +37,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_bucket_column, time_span
+from time_series_loader_spark.functions.bucketing import shift_in_time
 from time_series_loader_spark.functions.frequency import freq_to_seconds
-
-
-def _with_prev_value(
-    df: DataFrame,
-    ts_col: str,
-    group_cols: Sequence[str],
-    num_buckets: int | None,
-) -> DataFrame:
-    """Adds ``_prev`` = previous sample's ``_v`` in time order (null for
-    each series' first sample)."""
-    if group_cols:
-        w = Window.partitionBy(*group_cols).orderBy(ts_col)
-        return df.withColumn("_prev", F.lag("_v").over(w))
-
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    lo, hi = time_span(df, ts_col)
-    if lo is None or hi is None or hi <= lo or n <= 1:
-        w = Window.orderBy(ts_col)
-        return df.withColumn("_prev", F.lag("_v").over(w))
-    bucketed = df.withColumn("_pid", time_bucket_column(ts_col, lo, hi - lo, n))
-    bounds = bucketed.groupBy("_pid").agg(
-        F.max_by("_v", F.col(ts_col)).alias("_plast")
-    )
-    w_b = Window.orderBy("_pid")  # n rows — trivially single-partition
-    boundary = bounds.select(
-        "_pid", F.lag("_plast").over(w_b).alias("_boundary_prev")
-    )
-    w_local = Window.partitionBy("_pid").orderBy(ts_col)
-    return (
-        bucketed.withColumn("_local_prev", F.lag("_v").over(w_local))
-        .join(F.broadcast(boundary), "_pid", "left")
-        .withColumn("_prev", F.coalesce("_local_prev", "_boundary_prev"))
-        .drop("_pid", "_local_prev", "_boundary_prev")
-    )
 
 
 def counter_increase(
@@ -125,9 +89,9 @@ def counter_increase(
     base = df.select(*group_cols, ts_col, v_expr.alias("_v")).where(
         F.col("_v").isNotNull()
     )
-    lagged = _with_prev_value(base, ts_col, group_cols, num_buckets).where(
-        F.col("_prev").isNotNull()
-    )
+    lagged = shift_in_time(
+        base, ts_col, "_v", "_prev", group_cols=group_cols, num_buckets=num_buckets
+    ).where(F.col("_prev").isNotNull())
     reset = F.col("_v") < F.col("_prev")
     contrib = F.when(reset, F.col("_v")).otherwise(F.col("_v") - F.col("_prev"))
     # integer floor-division for the bucket id: the float form

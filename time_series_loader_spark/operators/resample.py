@@ -60,6 +60,11 @@ def _agg_expr(col: str, method: str, ts_col: str, skipna: bool, dtype: str = "do
     """One aggregate expression with pandas-compatible semantics."""
     c = F.col(col)
     integral = dtype in ("int", "bigint", "smallint", "tinyint")
+    if dtype in ("float", "double"):
+        # pandas treats NaN as missing: it must leave the sum AND the
+        # count like a null does (the decimal cast alone nulls the sum
+        # term but count() would still count the row)
+        c = F.when(~F.isnan(c), c)
     if method == "mean":
         if integral:
             base = F.sum(c).cast("double") / F.count(c)

@@ -23,10 +23,9 @@ Spark-first shape, exact and engine-reproducible:
 - One groupBy (bucket, keys): Σ v·overlap_us accumulates in DECIMAL
   (partition-order-independent — the house rule for double sums) over
   the exact integer weights; the single final division is double.
-- Keyed series hash-partition by key. Unkeyed input takes the
-  continuity.py discipline: deterministic time buckets, per-bucket
-  ``lead``, boundary rows stitched from a broadcast (bucket → next
-  bucket's min ts) table — never a single-partition window.
+- Keyed series hash-partition by key. Unkeyed input takes the next
+  sample from ``functions/bucketing.py::shift_in_time`` (time buckets +
+  boundary carry) — never a single-partition window.
 
 Null-valued samples are dropped before interval construction, which IS
 LOCF-with-null-skip: the previous non-null value carries across them.
@@ -36,48 +35,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_bucket_column, time_span
+from time_series_loader_spark.functions.bucketing import shift_in_time
 from time_series_loader_spark.functions.frequency import freq_to_seconds
-
-
-def _with_next_us(
-    df: DataFrame,
-    ts_col: str,
-    group_cols: Sequence[str],
-    num_buckets: int | None,
-) -> DataFrame:
-    """Adds ``_s`` (unix_micros of ts) and ``_e`` (next row's ``_s`` in
-    global/keyed time order). Unkeyed: bucketed lead + broadcast
-    next-bucket-min boundary table (mirror of continuity._with_prev_ts)."""
-    out = df.withColumn("_s", F.unix_micros(F.col(ts_col)))
-    if group_cols:
-        w = Window.partitionBy(*group_cols).orderBy("_s")
-        return out.withColumn("_e", F.lead("_s").over(w))
-
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    lo, hi = time_span(out, ts_col)
-    if lo is None or hi is None or hi <= lo or n <= 1:
-        w = Window.orderBy("_s")
-        return out.withColumn("_e", F.lead("_s").over(w))
-    bucketed = out.withColumn(
-        "_pid", time_bucket_column(ts_col, lo, hi - lo, n)
-    )
-    bounds = bucketed.groupBy("_pid").agg(F.min("_s").alias("_pmin"))
-    w_b = Window.orderBy("_pid")  # n rows — trivially single-partition
-    boundary = bounds.select(
-        "_pid", F.lead("_pmin").over(w_b).alias("_boundary_next")
-    )
-    w_local = Window.partitionBy("_pid").orderBy("_s")
-    return (
-        bucketed.withColumn("_local_next", F.lead("_s").over(w_local))
-        .join(F.broadcast(boundary), "_pid", "left")
-        .withColumn("_e", F.coalesce("_local_next", "_boundary_next"))
-        .drop("_pid", "_local_next", "_boundary_next")
-    )
 
 
 def time_weighted_mean(
@@ -99,9 +61,15 @@ def time_weighted_mean(
         raise ValueError("freq must be a positive duration")
 
     base = df.where(F.col(value_col).isNotNull()).select(
-        *group_cols, ts_col, F.col(value_col).cast("double").alias("_v")
+        *group_cols,
+        ts_col,
+        F.col(value_col).cast("double").alias("_v"),
+        F.unix_micros(F.col(ts_col)).alias("_s"),
     )
-    iv = _with_next_us(base, ts_col, group_cols, num_buckets).where(
+    # interval end = next sample's start
+    iv = shift_in_time(
+        base, ts_col, "_s", "_e", lead=True, group_cols=group_cols, num_buckets=num_buckets
+    ).where(
         F.col("_e").isNotNull() & (F.col("_e") > F.col("_s"))
     )
     # bucket indices covered by [_s, _e): floor(_s/step) .. floor((_e-1)/step)

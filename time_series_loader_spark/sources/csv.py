@@ -95,6 +95,47 @@ def min_rows_ok(path: str, min_rows: int, delimiter: str, encoding: str) -> bool
         return n >= min_rows
 
 
+def type_columns(
+    df: DataFrame, loading: LoadingConfig
+) -> tuple[DataFrame, Optional[str]]:
+    """Column typing shared by every CSV path (files and in-memory
+    buffers): parse the timestamp candidates, coerce string columns to
+    double (``loading.decimal`` → ``.``, then ``try_cast``: null on
+    failure), pass already-typed columns through. Returns the typed frame
+    and the column to sort by (``None`` when no timestamp candidate).
+
+    Timestamp candidates: ``loading.timestamp_column`` if set, else every
+    column named ``ts``/``date`` or containing ``time``.
+    """
+    ts_col = loading.timestamp_column
+    ts_candidates = (
+        [ts_col]
+        if ts_col
+        else [c for c in df.columns if "time" in c.lower() or c.lower() in ("ts", "date")]
+    )
+    dtypes = dict(df.dtypes)
+    exprs = []
+    for c in df.columns:
+        if c in ts_candidates:
+            if dtypes[c].startswith("timestamp"):
+                exprs.append(F.col(c))  # already typed (parquet)
+            else:
+                exprs.append(
+                    parse_timestamp_multi(
+                        F.col(c), loading.time_format, loading.fallback_time_formats
+                    ).alias(c)
+                )
+        elif loading.coerce_numeric and dtypes[c] == "string":
+            col = F.col(c)
+            if loading.decimal != ".":
+                col = F.replace(col, F.lit(loading.decimal), F.lit("."))
+            exprs.append(col.try_cast("double").alias(c))
+        else:
+            exprs.append(F.col(c))
+    sort_col = ts_col or (ts_candidates[0] if ts_candidates else None)
+    return df.select(*exprs), sort_col
+
+
 def load_csv_with_bad_records(
     spark: SparkSession,
     paths: Sequence[str],
@@ -155,32 +196,7 @@ def load_csv_timeseries(
 
     renamed = df.toDF(*[clean_column_name(c, naming) for c in df.columns])
 
-    ts_col = loading.timestamp_column
-    ts_candidates = (
-        [ts_col]
-        if ts_col
-        else [c for c in renamed.columns if "time" in c.lower() or c.lower() in ("ts", "date")]
-    )
-    dtypes = dict(renamed.dtypes)
-    exprs = []
-    for c in renamed.columns:
-        if c in ts_candidates:
-            if dtypes[c].startswith("timestamp"):
-                exprs.append(F.col(c))  # already typed (parquet)
-            else:
-                exprs.append(
-                    parse_timestamp_multi(
-                        F.col(c), loading.time_format, loading.fallback_time_formats
-                    ).alias(c)
-                )
-        elif loading.coerce_numeric and dtypes[c] == "string":
-            col = F.col(c)
-            if loading.decimal != ".":
-                col = F.replace(col, F.lit(loading.decimal), F.lit("."))
-            exprs.append(col.try_cast("double").alias(c))
-        else:
-            exprs.append(F.col(c))
-    typed = renamed.select(*exprs)
+    typed, sort_col = type_columns(renamed, loading)
 
     if loading.add_lineage:
         # input_file_name() is URL-encoded (spaces → %20); decode so it joins
@@ -193,7 +209,6 @@ def load_csv_timeseries(
             typed = typed.withColumn("file_start_time", F.lit(None).cast("timestamp"))
             typed = typed.withColumn("file_end_time", F.lit(None).cast("timestamp"))
 
-    sort_col = ts_col or (ts_candidates[0] if ts_candidates else None)
     if sort_col:
         typed = typed.orderBy(sort_col)  # O1 global sort (range exchange)
     return typed

@@ -19,10 +19,10 @@ from typing import Optional, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from time_series_loader_spark.config import ColumnNamingConfig, LoadingConfig
-from time_series_loader_spark.functions.timeparse import parse_timestamp_multi
-from time_series_loader_spark.sources.csv import clean_column_name
+from time_series_loader_spark.sources.csv import clean_column_name, type_columns
 from time_series_loader_spark.sources.metadata import FileMeta, MetadataExtractor
 
 
@@ -52,7 +52,8 @@ def load_buffers(
     extractor: Optional[MetadataExtractor] = None,
 ) -> DataFrame:
     """Parse named CSV buffers into one DataFrame with the standard
-    transforms (P1 coercion, P3-P5 naming, P6 timestamp parse, lineage)."""
+    transforms (P1 coercion, P3-P5 naming, P6 timestamp parse, lineage) —
+    typed by the same :func:`sources.csv.type_columns` as file input."""
     loading = loading or LoadingConfig()
     naming = naming or ColumnNamingConfig()
     ok, rejects = validate_buffers(buffers, extractor)
@@ -75,29 +76,16 @@ def load_buffers(
             contract = cols  # §1.3 first-buffer schema freeze
         elif cols != contract:
             raise ValueError(f"buffer {name!r} columns {cols} != contract {contract}")
-        sdf = spark.createDataFrame(pdf.replace({"": None}))
-
-        meta: Optional[FileMeta] = None
-        if extractor is not None:
-            meta = extractor.extract(name)
-        ts_candidates = (
-            [loading.timestamp_column]
-            if loading.timestamp_column
-            else [c for c in cols if "time" in c.lower()]
+        # every column is a string here (dtype=str): the shared typing
+        # step parses and coerces exactly as the file path does
+        sdf, sort_col = type_columns(
+            spark.createDataFrame(
+                pdf.replace({"": None}),
+                StructType([StructField(c, StringType()) for c in cols]),
+            ),
+            loading,
         )
-        exprs = []
-        for c in cols:
-            if c in ts_candidates:
-                exprs.append(
-                    parse_timestamp_multi(
-                        F.col(c), loading.time_format, loading.fallback_time_formats
-                    ).alias(c)
-                )
-            elif loading.coerce_numeric:
-                exprs.append(F.col(c).try_cast("double").alias(c))
-            else:
-                exprs.append(F.col(c))
-        sdf = sdf.select(*exprs)
+        meta: Optional[FileMeta] = extractor.extract(name) if extractor is not None else None
         if loading.add_lineage:
             sdf = (
                 sdf.withColumn("source_file", F.lit(name))
@@ -115,7 +103,4 @@ def load_buffers(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    sort_col = loading.timestamp_column or next(
-        (c for c in contract if "time" in c.lower()), None
-    )
     return out.orderBy(sort_col) if sort_col else out
