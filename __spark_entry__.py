@@ -37,6 +37,7 @@ except Exception:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from time_series_loader_spark.functions.exact import ACC, exact_mean, exact_sum
 from time_series_loader_spark.operators.asof import asof_nearest
 from time_series_loader_spark.operators.continuity import (
     find_gaps,
@@ -47,8 +48,6 @@ from time_series_loader_spark.operators.grid import reindex_to_grid
 from time_series_loader_spark.operators.interpolate import interpolate_time
 from time_series_loader_spark.operators.outliers import remove_outliers_zscore
 from time_series_loader_spark.operators.resample import resample, resample_with_dates
-
-_DEC = "decimal(27,6)"
 
 
 def _prep(spark: SparkSession) -> None:
@@ -147,14 +146,6 @@ def _local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     1-partition. (1-row frames with literal-expressible values should use
     ``_one_row_df``, which never leaves the JVM at all.)"""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
-def _dsum(c):
-    return F.sum(F.col(c).cast(_DEC)).cast("double")
-
-
-def _davg(c):
-    return F.sum(F.col(c).cast(_DEC)).cast("double") / F.count(F.col(c))
 
 
 # --------------------------------------------------------------------------
@@ -695,13 +686,13 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _r6(_dsum("l_quantity"), "sum_qty"),
-            _r6(_dsum("l_extendedprice"), "sum_base_price"),
-            _r6(F.sum(disc.cast(_DEC)).cast("double"), "sum_disc_price"),
-            _r6(F.sum(charge.cast(_DEC)).cast("double"), "sum_charge"),
-            _r6(_davg("l_quantity"), "avg_qty"),
-            _r6(_davg("l_extendedprice"), "avg_price"),
-            _r6(_davg("l_discount"), "avg_disc"),
+            _r6(exact_sum(F.col("l_quantity"), inf=False), "sum_qty"),
+            _r6(exact_sum(F.col("l_extendedprice"), inf=False), "sum_base_price"),
+            _r6(exact_sum(disc, inf=False), "sum_disc_price"),
+            _r6(exact_sum(charge, inf=False), "sum_charge"),
+            _r6(exact_mean(F.col("l_quantity"), inf=False), "avg_qty"),
+            _r6(exact_mean(F.col("l_extendedprice"), inf=False), "avg_price"),
+            _r6(exact_mean(F.col("l_discount"), inf=False), "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -733,14 +724,14 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(_DEC)
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("r_name", "n_name")
-        .agg(_r6(F.sum(rev).cast("double"), "revenue"), F.count(F.lit(1)).alias("n_items"))
+        .agg(_r6(exact_sum(rev, inf=False), "revenue"), F.count(F.lit(1)).alias("n_items"))
     )
 
 
@@ -768,7 +759,7 @@ def q_top3_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name", "c_custkey")
-        .agg(F.sum(F.col("o_totalprice").cast(_DEC)).alias("spent_dec"))
+        .agg(F.sum(F.col("o_totalprice").cast(ACC)).alias("spent_dec"))
     )
     w = Window.partitionBy("n_name").orderBy(F.col("spent_dec").desc(), F.col("c_custkey").asc())
     return (
@@ -807,7 +798,7 @@ def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.cube("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            _r6(_dsum("l_quantity"), "sum_qty"),
+            _r6(exact_sum(F.col("l_quantity"), inf=False), "sum_qty"),
             F.grouping_id().cast("long").alias("gid"),
         )
     )
@@ -4382,12 +4373,12 @@ def q_tpch_q3_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < F.lit("1998-03-15"))
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > F.lit("1998-03-15"))
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(_DEC)
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     out = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(rev).alias("rev_dec"))
+        .agg(F.sum(rev.cast(ACC)).alias("rev_dec"))
         .orderBy(F.col("rev_dec").desc(), F.col("l_orderkey").asc())
         .limit(10)
     )
@@ -4425,7 +4416,7 @@ def q_tpch_q5_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(_DEC)
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -4434,7 +4425,7 @@ def q_tpch_q5_like(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("r_name", "n_name")
-        .agg(_r6(F.sum(rev).cast("double"), "revenue"), F.count(F.lit(1)).alias("n_items"))
+        .agg(_r6(exact_sum(rev, inf=False), "revenue"), F.count(F.lit(1)).alias("n_items"))
     )
 
 
@@ -4465,9 +4456,9 @@ def q_tpch_q6_like(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     )
-    rev = (F.col("l_extendedprice") * F.col("l_discount")).cast(_DEC)
+    rev = F.col("l_extendedprice") * F.col("l_discount")
     return filtered.agg(
-        _r6(F.sum(rev).cast("double"), "revenue"), F.count(F.lit(1)).alias("n_rows")
+        _r6(exact_sum(rev, inf=False), "revenue"), F.count(F.lit(1)).alias("n_rows")
     )
 
 
@@ -4477,23 +4468,6 @@ SELECT floor((CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(27,6))) AS D
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
   AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24
-"""
-
-
-def q_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets (SURVEY.md §2.4 'free in Spark')."""
-    _prep(spark)
-    o = _t(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n"),
-        _r6(_dsum("o_totalprice"), "sum_price"),
-    )
-
-
-SQL_cube_orders = """
-SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-       floor((CAST(SUM(CAST(o_totalprice AS DECIMAL(27,6))) AS DOUBLE))*1000000 + 0.5)/1000000 AS sum_price
-FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
 

@@ -126,3 +126,25 @@ def test_resample_excluding_large_gaps(spark, tmp_path):
     assert datetime(2023, 1, 2, 0) not in times  # inside the excluded gap
     # small gaps (≤ max_gap_size) are still gridded: nothing else dropped
     assert datetime(2023, 1, 1, 22) in times and datetime(2023, 1, 3, 0) in times
+
+
+@pytest.mark.parametrize("bom_first", [True, False])
+def test_utf8_bom_file_loads_beside_plain_file(spark, tmp_path, bom_first):
+    # Spark's read strips a UTF-8 byte-order mark; the driver-side header
+    # contract must too, or the BOM file is rejected as a schema mismatch
+    text = {1: "value;Time\n1;01/01/2023 00:00\n", 2: "value;Time\n2;01/01/2023 01:00\n"}
+    bom_day = 1 if bom_first else 2
+    files = []
+    for day, body in text.items():
+        p = tmp_path / f"f{day}.csv"
+        p.write_text(("\ufeff" if day == bom_day else "") + body, encoding="utf-8")
+        files.append(str(p))
+    loader = TimeSeriesLoader.from_files(
+        spark, files, loading=LoadingConfig(timestamp_column="Time")
+    )
+    rows = loader.initialize().collect()
+    assert loader.ledger.report()["total_errors"] == 0
+    assert [(r["Time"], r["value"]) for r in rows] == [
+        (datetime(2023, 1, 1, 0), 1.0),
+        (datetime(2023, 1, 1, 1), 2.0),
+    ]

@@ -98,3 +98,12 @@ def test_profile_empty_frame(spark):
     assert prof["id"]["n_rows"] == 0
     assert prof["id"]["null_frac"] is None
     assert prof["v"]["mean"] is None
+
+
+def test_profile_mean_skips_nan_and_propagates_inf(spark):
+    df = spark.createDataFrame(
+        [(1.0, 1.0), (float("nan"), float("inf")), (2.0, 2.0)], "a DOUBLE, b DOUBLE"
+    )
+    prof = {r["column"]: r for r in profile_table(df, approx=False).collect()}
+    assert prof["a"]["mean"] == pytest.approx(1.5)  # pandas mean of [1, NaN, 2]
+    assert prof["b"]["mean"] == float("inf")

@@ -77,6 +77,31 @@ def test_resample_nan_input_matches_pandas(spark, method):
         assert strict[datetime(2023, 1, 1, 0)] == pytest.approx(expected["value"].iloc[0])
 
 
+@pytest.mark.parametrize("method", ["mean", "sum"])
+@pytest.mark.parametrize(
+    "values",
+    [[1.0, float("inf"), 2.0], [1.0, float("inf"), float("-inf"), 2.0], [1e21, 1.0]],
+    ids=["inf", "both_infs", "1e21"],
+)
+def test_resample_inf_and_magnitude_match_pandas(spark, values, method):
+    # pandas groupby rule: ±Inf propagates (both signs → NaN); magnitudes
+    # past DECIMAL(27,6) still average exactly
+    rows = [(datetime(2023, 1, 1) + timedelta(minutes=10 * i), v) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "timestamp TIMESTAMP, value DOUBLE")
+    (got,) = [r["value"] for r in resample(df, "timestamp", "1h", method=method).collect()]
+    idx = pd.date_range("2023-01-01", periods=len(values), freq="10min")
+    (expect,) = getattr(pd.Series(values, index=idx).resample("1h"), method)().tolist()
+    assert got == pytest.approx(expect, nan_ok=True)
+
+
+def test_resample_out_of_range_raises_named_error(spark):
+    # |x| >= 1e32 does not fit the accumulator: a named error, never a null
+    rows = [(datetime(2023, 1, 1), 5e32), (datetime(2023, 1, 1, 0, 10), 1.0)]
+    df = spark.createDataFrame(rows, "timestamp TIMESTAMP, value DOUBLE")
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        resample(df, "timestamp", "1h").collect()
+
+
 def test_resample_invalid_method(spark, hourly_df):
     with pytest.raises(ValueError, match="invalid resample method"):
         resample(hourly_df, "timestamp", "1h", method="mode")

@@ -177,3 +177,28 @@ def test_idf_logp_quantization_ulp_stable(spark, sf_dir):
         stable(math.log((n_docs + 1.0) / (d + 1.0)) + 1.0)
     for c in cts:
         stable(math.log((c + 1.0) / denom))
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        [1.0, math.nan, 2.0, 2.0],
+        [1.0, math.inf, 2.0, 2.0],
+        [1.0, math.inf, -math.inf, 2.0, math.nan, -math.inf],
+    ],
+    ids=["nan", "inf", "mixed"],
+)
+def test_keyed_row_window_nan_inf_match_pandas(spark, values):
+    # pandas Rolling: NaN and ±Inf are missing for mean/min/max, while
+    # count() still counts ±Inf
+    rows = [("k", datetime(2023, 1, 1) + timedelta(minutes=10 * i), v) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "k STRING, ts TIMESTAMP, v DOUBLE")
+    out = rolling_stats(df, "ts", "v", window=3, group_cols=["k"]).orderBy("ts").collect()
+    exp = pd.Series(values).rolling(3, min_periods=1)
+    got = {
+        stat: [r[f"v_roll_{stat}"] for r in out] for stat in ("mean", "min", "max", "n")
+    }
+    assert got["mean"] == pytest.approx(exp.mean().tolist())
+    assert got["min"] == pytest.approx(exp.min().tolist())
+    assert got["max"] == pytest.approx(exp.max().tolist())
+    assert got["n"] == exp.count().astype(int).tolist()

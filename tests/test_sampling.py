@@ -321,6 +321,21 @@ def test_weighted_sample_degenerate_weights(spark):
     assert all(i % 2 == 0 for i in kept)  # clamped rows (w<0) never sampled
 
 
+def test_weighted_sample_unusable_weights_leave_the_mean(spark):
+    """Null and NaN weights are dropped AND left out of mean(w): the
+    usable rows keep exactly the rows they keep with those rows removed
+    (counting them would halve the mean and double every p)."""
+    from time_series_loader_spark.operators.sampling import weighted_sample
+
+    usable = [(i, 1.0) for i in range(200)]
+    unusable = [(1000 + i, None if i % 2 else float("nan")) for i in range(200)]
+    clean = spark.createDataFrame(usable, "doc_id LONG, w DOUBLE")
+    dirty = spark.createDataFrame(usable + unusable, "doc_id LONG, w DOUBLE")
+    want = {r["doc_id"] for r in weighted_sample(clean, "doc_id", "w", 0.1).collect()}
+    got = {r["doc_id"] for r in weighted_sample(dirty, "doc_id", "w", 0.1).collect()}
+    assert got == want and 0 < len(want) < 60
+
+
 def test_shard_pack_rejects_string_keys(spark):
     rows = [("doc-%03d" % i, 5) for i in range(10)]
     df = spark.createDataFrame(rows, "doc_id STRING, w LONG")

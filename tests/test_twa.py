@@ -4,6 +4,7 @@ differential, keyed/unkeyed parity, bucket-edge exactness."""
 import datetime as dt
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,3 +115,22 @@ def test_keyed_series_stay_separate(spark):
     vals = {(r["user_id"], r["ts"].replace(tzinfo=None)): r["twa"] for r in out.collect()}
     assert vals[("a", T0)] == pytest.approx(2.0)
     assert vals[("b", T0)] == pytest.approx(12.0)
+
+
+@pytest.mark.parametrize("keyed", [True, False])
+def test_nan_sample_is_skipped_like_null(spark, keyed):
+    # [1, NaN, 2, 2] every 10 minutes: NaN is missing, so 1 holds for
+    # 20 minutes and 2 for the last 10 (pandas: dropna, then weight each
+    # value by the time until the next sample)
+    pts = [(0, 1.0), (600, float("nan")), (1200, 2.0), (1800, 2.0)]
+    s = pd.Series(
+        [v for _, v in pts],
+        index=[pd.Timestamp(T0) + pd.Timedelta(seconds=t) for t, _ in pts],
+    ).dropna()
+    held = np.diff(s.index.asi8) / 1e9
+    expect = float((s.iloc[:-1] * held).sum() / held.sum())
+    assert expect == pytest.approx(4 / 3)
+    df = _df(spark, pts, key="k" if keyed else None)
+    out = _collect(time_weighted_mean(df, "ts", "value", "1h",
+                                      group_cols=["user_id"] if keyed else ()))
+    assert out == {T0: pytest.approx(expect)}

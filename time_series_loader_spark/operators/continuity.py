@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_loader_spark.functions.bucketing import shift_in_time
+from time_series_loader_spark.functions.exact import exact_sum
 from time_series_loader_spark.functions.frequency import freq_to_seconds
 
 
@@ -181,15 +182,8 @@ def continuity_stats(
         .groupBy(*group_cols)
         .agg(
             F.count(F.lit(1)).alias("n_gaps"),
-            # DECIMAL accumulation (house rule): a double SUM is
-            # partition-order-dependent, so the same data can produce
-            # last-ulp-different totals under different parallelism —
-            # exactly the cross-run drift an oracle gate can't tolerate.
-            # gap_seconds is a µs-precision epoch diff (≤6dp), so the
-            # decimal cast is exact.
-            F.sum(F.col("gap_seconds").cast("decimal(27,6)"))
-            .cast("double")
-            .alias("gap_seconds_total"),
+            # gap_seconds is a µs-precision epoch diff: the 6-dp cast is exact
+            exact_sum(F.col("gap_seconds")).alias("gap_seconds_total"),
         )
     )
     joined = base.join(gaps, list(group_cols), "left") if group_cols else base.crossJoin(gaps)

@@ -29,6 +29,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from time_series_loader_spark.functions.exact import exact_mean, exact_sum, present
 from time_series_loader_spark.functions.frequency import freq_to_seconds
 
 _NUMERIC_TYPES = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
@@ -49,29 +50,16 @@ def bucket_start(ts: Column | str, step_seconds: int, origin_epoch: int = 0) -> 
     )
 
 
-# Exact accumulator for float sums/means: decimal addition is associative
-# and commutative, so results are bit-identical regardless of partitioning
-# or merge order — required for reproducible pipelines (and oracle parity).
-# 15 integer digits of headroom; overflow → null (caller's signal to widen).
-_DEC = "decimal(27,6)"
-
-
 def _agg_expr(col: str, method: str, ts_col: str, skipna: bool, dtype: str = "double") -> Column:
     """One aggregate expression with pandas-compatible semantics."""
-    c = F.col(col)
+    raw = F.col(col)
     integral = dtype in ("int", "bigint", "smallint", "tinyint")
-    if dtype in ("float", "double"):
-        # pandas treats NaN as missing: it must leave the sum AND the
-        # count like a null does (the decimal cast alone nulls the sum
-        # term but count() would still count the row)
-        c = F.when(~F.isnan(c), c)
+    # pandas groupby rules (functions/exact.py): NaN is missing everywhere
+    c = present(raw) if dtype in ("float", "double") else raw
     if method == "mean":
-        if integral:
-            base = F.sum(c).cast("double") / F.count(c)
-        else:
-            base = F.sum(c.cast(_DEC)).cast("double") / F.count(c)
+        base = F.sum(c).cast("double") / F.count(c) if integral else exact_mean(raw)
     elif method == "sum":
-        base = F.sum(c) if integral else F.sum(c.cast(_DEC)).cast("double")
+        base = F.sum(c) if integral else exact_sum(raw)
     elif method == "first":
         # pandas .resample().first() = first NON-NULL by time order; rows
         # with null value get a null struct, which min skips. Lexicographic

@@ -7,8 +7,8 @@ both JVM-side, hash-partitioned by the series key (the 100 TB shape; the
 unkeyed form inherits the same single-partition caveat as any global
 ordering and is intended for composed, already-reduced frames).
 
-Means accumulate in DECIMAL like every float aggregate in this engine —
-rolling results are reproducible across partitionings.
+Means are exact under pandas' ``Rolling`` value rule (``functions/exact.py``),
+so rolling results are reproducible across partitionings.
 """
 
 from __future__ import annotations
@@ -18,9 +18,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_loader_spark.functions.exact import exact_count, exact_mean, present
 from time_series_loader_spark.functions.frequency import freq_to_seconds
-
-_DEC = "decimal(27,6)"
 
 
 def rolling_stats(
@@ -53,13 +52,14 @@ def rolling_stats(
         ).rangeBetween(-(secs), 0)
 
     c = F.col(value_col)
-    cnt = F.count(c).over(base)
-    mean = F.sum(c.cast(_DEC)).over(base).cast("double") / cnt
-    out = df.select(
+    # min_periods gates on the finite values the statistics use; the
+    # count column counts ±Inf, as pandas' Rolling.count does
+    ok = exact_count(c, base, inf_missing=True) >= min_periods
+    finite = present(c, inf_missing=True)
+    return df.select(
         "*",
-        F.when(cnt >= min_periods, mean).alias(f"{value_col}_roll_mean"),
-        F.when(cnt >= min_periods, F.min(c).over(base)).alias(f"{value_col}_roll_min"),
-        F.when(cnt >= min_periods, F.max(c).over(base)).alias(f"{value_col}_roll_max"),
-        cnt.alias(f"{value_col}_roll_n"),
+        F.when(ok, exact_mean(c, base)).alias(f"{value_col}_roll_mean"),
+        F.when(ok, F.min(finite).over(base)).alias(f"{value_col}_roll_min"),
+        F.when(ok, F.max(finite).over(base)).alias(f"{value_col}_roll_max"),
+        exact_count(c, base).alias(f"{value_col}_roll_n"),
     )
-    return out

@@ -27,6 +27,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_loader_spark.functions.exact import exact_count, exact_sum, present
+
 # 16-bit bucket from the first 4 hex digits of md5(key) — arithmetic that
 # both Spark and any SQL oracle reproduce exactly (no engine hash functions,
 # which differ between Spark's xxhash64 and DuckDB's hash).
@@ -93,26 +95,26 @@ def weighted_sample(
     Decision rule: ``hash_bucket(key, salt) < p_i · 65536`` — the same
     md5-bucket determinism as :func:`stratified_sample` (reproducible
     under repartition/retry/engine change; raising ``fraction`` only
-    ADDs rows). The mean weight accumulates in DECIMAL (partition-order
-    independent) and broadcasts as a 1-row frame; the fact side stays a
-    narrow filter. Rows with null weight are dropped; weights are
-    clamped at 0.
+    ADDs rows). The exact mean weight (``functions/exact.py``) broadcasts
+    as a 1-row frame; the fact side stays a narrow filter. Null and NaN
+    weights drop their row and leave the mean; weights clamp at 0.
 
     Note the p_i = 1 saturation point: rows with w_i ≥ mean/``fraction``
     are always kept, so the realized fraction can drift below target on
     heavy-tailed weights — the standard weighted-Bernoulli caveat.
     """
-    clamped = F.greatest(F.col(weight_col), F.lit(0))
+    # NaN weights read as null, which greatest() skips: they clamp to 0
+    clamped = F.greatest(present(F.col(weight_col)), F.lit(0))
     # the mean MUST average the same CLAMPED weights the numerator uses:
     # a raw mean over negative-weight rows can go ≤ 0 and silently
     # invert (or zero-divide) every row's decision
     stats = df.agg(
         (
-            F.sum(clamped.cast("decimal(27,6)")).cast("double")
-            # greatest(count, 1): an all-null-weight frame has count 0,
-            # which is an ANSI divide-by-zero; with the floor the mean
-            # becomes 0 and the p > 0 guard below yields an empty sample
-            / F.greatest(F.count(weight_col), F.lit(1))
+            exact_sum(clamped)
+            # raw weights: null/NaN rows must not lower the mean; the floor
+            # of 1 turns an all-null frame's ANSI divide-by-zero into mean 0,
+            # which the p > 0 guard below makes an empty sample
+            / F.greatest(exact_count(F.col(weight_col)), F.lit(1))
         ).alias("_mean_w")
     )
     p = F.when(

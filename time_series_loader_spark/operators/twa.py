@@ -20,15 +20,16 @@ Spark-first shape, exact and engine-reproducible:
   over bucket INDICES (k rows; a gap of length G produces G/step rows —
   the same expansion grid reindex pays, and the honest cost of asking
   for per-bucket values across a gap).
-- One groupBy (bucket, keys): Σ v·overlap_us accumulates in DECIMAL
-  (partition-order-independent — the house rule for double sums) over
-  the exact integer weights; the single final division is double.
+- One groupBy (bucket, keys): Σ v·overlap_us is an exact weighted sum
+  (``functions/exact.py``) over the exact integer weights; the single
+  final division is double.
 - Keyed series hash-partition by key. Unkeyed input takes the next
   sample from ``functions/bucketing.py::shift_in_time`` (time buckets +
   boundary carry) — never a single-partition window.
 
-Null-valued samples are dropped before interval construction, which IS
-LOCF-with-null-skip: the previous non-null value carries across them.
+Null and NaN samples are dropped before interval construction, which IS
+LOCF-with-null-skip: the previous present value carries across them. A
+±Inf sample propagates to every bucket its interval overlaps.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from time_series_loader_spark.functions.bucketing import shift_in_time
+from time_series_loader_spark.functions.exact import exact_sum, present
 from time_series_loader_spark.functions.frequency import freq_to_seconds
 
 
@@ -60,12 +62,12 @@ def time_weighted_mean(
     if step_us <= 0:
         raise ValueError("freq must be a positive duration")
 
-    base = df.where(F.col(value_col).isNotNull()).select(
+    base = df.select(
         *group_cols,
         ts_col,
-        F.col(value_col).cast("double").alias("_v"),
+        present(F.col(value_col).cast("double")).alias("_v"),
         F.unix_micros(F.col(ts_col)).alias("_s"),
-    )
+    ).where(F.col("_v").isNotNull())
     # interval end = next sample's start
     iv = shift_in_time(
         base, ts_col, "_s", "_e", lead=True, group_cols=group_cols, num_buckets=num_buckets
@@ -89,12 +91,12 @@ def time_weighted_mean(
         pieces.withColumn("_ov", ov)
         .groupBy(*group_cols, "_b")
         .agg(
-            F.sum(F.col("_v").cast("decimal(27,6)") * F.col("_ov")).alias("_num"),
+            exact_sum(F.col("_v"), weight=F.col("_ov")).alias("_num"),
             F.sum("_ov").alias("_den"),
         )
     )
     return agg.select(
         *group_cols,
         F.timestamp_micros((F.col("_b") * step_us).cast("long")).alias(ts_col),
-        (F.col("_num").cast("double") / F.col("_den").cast("double")).alias(out_col),
+        (F.col("_num") / F.col("_den").cast("double")).alias(out_col),
     )

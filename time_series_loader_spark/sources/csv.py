@@ -25,6 +25,7 @@ to the scan as usual (header validation reads ~1 line per file).
 
 from __future__ import annotations
 
+import codecs
 import csv as _csv
 from typing import Optional, Sequence
 
@@ -36,9 +37,15 @@ from time_series_loader_spark.functions.timeparse import parse_timestamp_multi
 from time_series_loader_spark.sources.metadata import FileMeta, metadata_dataframe
 
 
+def _open_text(path: str, encoding: str):
+    # Spark's CSV read strips a UTF-8 byte-order mark; so do the header checks
+    utf8 = codecs.lookup(encoding).name == "utf-8"
+    return open(path, "r", encoding="utf-8-sig" if utf8 else encoding, newline="")
+
+
 def read_header(path: str, delimiter: str = ";", encoding: str = "utf-8") -> list[str]:
     """S5: column names of one file without reading data."""
-    with open(path, "r", encoding=encoding, newline="") as f:
+    with _open_text(path, encoding) as f:
         reader = _csv.reader(f, delimiter=delimiter)
         try:
             return next(reader)
@@ -82,7 +89,7 @@ def clean_column_name(name: str, naming: ColumnNamingConfig) -> str:
 def min_rows_ok(path: str, min_rows: int, delimiter: str, encoding: str) -> bool:
     """S8 content validator: header present and at least ``min_rows`` rows,
     peeking only min_rows+1 lines (reference ``ts_extensions.py:214-269``)."""
-    with open(path, "r", encoding=encoding, newline="") as f:
+    with _open_text(path, encoding) as f:
         reader = _csv.reader(f, delimiter=delimiter)
         header = next(reader, None)
         if not header:

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from time_series_loader_spark.functions.exact import exact_count, exact_mean, exact_sum
+
 
 def file_as_stream_dir(path: str) -> str:
     """Spark's file stream source requires a DIRECTORY; expose a single
@@ -77,7 +79,8 @@ def windowed_resample_stream(
     watermark: str = "10 minutes",
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Streaming A1: watermarked tumbling-window count/mean.
+    """Streaming A1: watermarked tumbling-window count/mean (NaN-aware,
+    exact: ``functions/exact.py``).
 
     Append mode emits a window only once the watermark passes its end —
     late rows beyond the watermark are dropped (the reference's overlap
@@ -86,16 +89,15 @@ def windowed_resample_stream(
         sdf.withWatermark(ts_col, watermark)
         .groupBy(*group_cols, F.window(ts_col, window).alias("w"))
         .agg(
-            F.count(value_col).alias("n"),
-            # decimal accumulation: state-merge order can't perturb the mean
-            F.sum(F.col(value_col).cast("decimal(27,6)")).alias("_sum_dec"),
+            exact_count(F.col(value_col)).alias("n"),
+            exact_mean(F.col(value_col)).alias("value_mean"),
         )
         .select(
             *group_cols,
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
             "n",
-            (F.col("_sum_dec").cast("double") / F.col("n")).alias("value_mean"),
+            "value_mean",
         )
     )
 
@@ -118,21 +120,19 @@ def session_window_stream(
     """
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col is not None:
-        aggs.append(F.sum(F.col(value_col).cast("decimal(27,6)")).alias("_sum_dec"))
-    out = (
+        aggs.append(exact_sum(F.col(value_col)).alias("value_sum"))
+    return (
         sdf.withWatermark(ts_col, watermark)
         .groupBy(*key_cols, F.session_window(F.col(ts_col), gap).alias("sw"))
         .agg(*aggs)
+        .select(
+            *key_cols,
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "n_events",
+            *(["value_sum"] if value_col is not None else []),
+        )
     )
-    cols = [
-        *key_cols,
-        F.col("sw.start").alias("session_start"),
-        F.col("sw.end").alias("session_end"),
-        "n_events",
-    ]
-    if value_col is not None:
-        cols.append(F.col("_sum_dec").cast("double").alias("value_sum"))
-    return out.select(*cols)
 
 
 def dedup_stream(

@@ -14,8 +14,7 @@ a fixed window).
 
 from __future__ import annotations
 
-import math
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Any, Callable, Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,6 +26,26 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from time_series_loader_spark.functions.exact import micro_units
+
+
+def _per_key(
+    events: DataFrame,
+    key_col: str,
+    fn: Callable[..., Iterator[pd.DataFrame]],
+    out_schema: StructType,
+    state_schema: StructType,
+) -> DataFrame:
+    # every operator here keeps O(1) state per key: no timeout needed
+    return events.groupBy(key_col).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
 
 GAP_SCHEMA = StructType(
     [
@@ -84,16 +103,7 @@ def streaming_gap_detector(
         if out:
             yield pd.DataFrame(out, columns=["user_id", "gap_start", "gap_end", "gap_seconds"])
 
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            detect,
-            outputStructType=GAP_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _per_key(events, key_col, detect, GAP_SCHEMA, STATE_SCHEMA)
 
 
 RATE_SCHEMA = StructType(
@@ -106,9 +116,7 @@ RATE_SCHEMA = StructType(
     ]
 )
 
-# last sample carried across micro-batches: event time + the reading in
-# exact 1e-6 micro-units (integer — the same DECIMAL(27,6) quantization
-# operators/rate.py applies, so stream and batch do identical arithmetic)
+# last sample carried across micro-batches: event time + reading in µunits
 RATE_STATE_SCHEMA = StructType(
     [
         StructField("last_ts_micros", LongType()),
@@ -133,16 +141,11 @@ def streaming_counter_rate(
     with ``groupBy(bucket_ts).sum``, and with a single batch the output
     equals the batch operator row-for-row, which is how it's tested).
 
-    Arithmetic parity with batch: readings quantize to integer
-    micro-units (``floor(v·1e6 + 0.5)`` — identical to the batch
-    DECIMAL(27,6) cast for the non-negative values counters carry), so
-    reset detection, deltas, and per-bucket sums are exact integer math
-    in both engines. State is O(1) per key (two longs) — unbounded
-    streams run indefinitely. Unusable readings — NULL, NaN, ±Inf, or
-    past the DECIMAL(27,6)/µunit envelope — are NOT samples under the
-    shared contract: both engines skip them and the delta spans across
-    (batch filters the quantized value; here the skip also leaves the
-    stored state untouched).
+    Arithmetic parity with batch: readings become integer micro-units
+    (``micro_units``, the twin of the batch DECIMAL(27,6) cast), so reset
+    detection, deltas and per-bucket sums are exact integer math in both
+    engines. Readings the cast nulls are NOT samples: both engines skip
+    them and the delta spans across. State is O(1) per key (two longs).
 
     Ordering contract (inherent to any sequential stateful op): rows
     are sorted by event time WITHIN each micro-batch, but a sample
@@ -150,8 +153,6 @@ def streaming_counter_rate(
     state is dropped (monotone ingest assumption — same as the batch
     operator's one-pass lag semantics under ordered input).
     """
-    import numpy as np
-
     step_us = int(round(freq_seconds * 1_000_000))
     if step_us <= 0:
         raise ValueError("freq_seconds must be positive")
@@ -177,23 +178,9 @@ def streaming_counter_rate(
                 t_us = int(pd.Timestamp(ts).value // 1000)
                 if last_ts is not None and t_us <= last_ts:
                     continue  # late/duplicate sample: state already past it
-                fv = float(v)
-                # non-finite / DECIMAL(27,6)-overflow readings are NOT
-                # samples: the batch operator's quantized-value filter
-                # skips them and the delta spans across (same rule as
-                # null/NaN readings — one uniform contract both engines
-                # share). A bare int(np.floor(inf)) here used to raise
-                # OverflowError and crash the whole query.
-                if not math.isfinite(fv) or abs(fv) >= 1e21:
-                    continue
-                # half-AWAY-FROM-ZERO, sign-aware: Java/Spark HALF_UP on
-                # DECIMAL(27,6) rounds -1.0000005 to -1.000001, but a bare
-                # floor(v*1e6+0.5) would give -1.000000 — counters may
-                # legitimately carry negative readings (ADVICE r6), so the
-                # documented stream/batch parity must hold for them too
-                v_u = int(np.floor(abs(fv) * 1e6 + 0.5))
-                if fv < 0:
-                    v_u = -v_u
+                v_u = micro_units(float(v), 1e21)
+                if v_u is None:
+                    continue  # not a sample: the delta spans across it
                 if last_v is not None:
                     reset = v_u < last_v
                     contrib = v_u if reset else v_u - last_v
@@ -219,13 +206,7 @@ def streaming_counter_rate(
                 columns=["user_id", "bucket_ts", "increase", "rate", "n_resets"],
             )
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        rate_fn,
-        outputStructType=RATE_SCHEMA,
-        stateStructType=RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _per_key(events, key_col, rate_fn, RATE_SCHEMA, RATE_STATE_SCHEMA)
 
 
 EWM_SCHEMA = StructType(
@@ -334,13 +315,7 @@ def streaming_ewm_mean(
         if out:
             yield pd.DataFrame(out, columns=["user_id", "ts", "value", "ewm"])
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        ewm_fn,
-        outputStructType=EWM_SCHEMA,
-        stateStructType=EWM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _per_key(events, key_col, ewm_fn, EWM_SCHEMA, EWM_STATE_SCHEMA)
 
 
 CUSUM_SCHEMA = StructType(
@@ -386,19 +361,15 @@ def streaming_cusum(
     single batch the output equals the batch operator row-for-row,
     which is how it's tested).
 
-    Arithmetic parity with batch: readings quantize sign-aware to
-    integer µunits (matching the DECIMAL(18,6) HALF_UP cast), the fixed
-    target and threshold quantize once, and every accumulator is exact
-    integer math — so stream and batch agree BIT-FOR-BIT, not
-    approximately. Unusable readings (NULL/NaN/±Inf/envelope) are
-    skipped under the shared contract. State is O(1) per key (eight
-    longs); the monotone-ingest ordering contract matches
-    :func:`streaming_counter_rate`.
+    Arithmetic parity with batch: readings become integer µunits
+    (``micro_units``, the twin of the DECIMAL(18,6) cast; readings it
+    nulls are skipped), target and threshold quantize once, and every
+    accumulator is exact integer math — stream and batch agree
+    BIT-FOR-BIT. State is O(1) per key (eight longs); ordering contract
+    as in :func:`streaming_counter_rate`.
     """
     t_u = int(round(target * 1_000_000))
     thr_u = int(round(threshold * 1_000_000))
-
-    import numpy as np
 
     def cusum_fn(
         key: Tuple[Any, ...],
@@ -418,13 +389,9 @@ def streaming_cusum(
                 t_us = int(pd.Timestamp(ts).value // 1000)
                 if last_ts is not None and t_us <= last_ts:
                     continue  # late/duplicate sample (monotone ingest)
-                fv = float(v)
-                # try_cast(DECIMAL(18,6)) envelope: |v| >= 1e12 nulls out
-                if not math.isfinite(fv) or abs(fv) >= 1e12:
-                    continue
-                v_u = int(np.floor(abs(fv) * 1e6 + 0.5))
-                if fv < 0:
-                    v_u = -v_u
+                v_u = micro_units(float(v), 1e12)
+                if v_u is None:
+                    continue  # try_cast(DECIMAL(18,6)) envelope
                 d = v_u - t_u
                 sp = max(0, sp + d)
                 sn = max(0, sn - d)
@@ -447,13 +414,7 @@ def streaming_cusum(
                 ],
             )
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        cusum_fn,
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _per_key(events, key_col, cusum_fn, CUSUM_SCHEMA, CUSUM_STATE_SCHEMA)
 
 
 TREND_SCHEMA = StructType(
@@ -503,7 +464,6 @@ def streaming_trend_slope(
     |v| ≤ 1e3 it is ~3e16). The envelope check below bounds |v| < 1e12
     only — for extreme series lengths re-origin per window upstream.
     """
-    import numpy as np
 
     def trend_fn(
         key: Tuple[Any, ...],
@@ -523,12 +483,9 @@ def streaming_trend_slope(
                 t_us = int(pd.Timestamp(ts).value // 1000)
                 if last_ts is not None and t_us <= last_ts:
                     continue  # late/duplicate sample (monotone ingest)
-                fv = float(v)
-                if not math.isfinite(fv) or abs(fv) >= 1e12:
+                v_u = micro_units(float(v), 1e12)
+                if v_u is None:
                     continue  # try_cast(DECIMAL(18,6)) envelope
-                v_u = int(np.floor(abs(fv) * 1e6 + 0.5))
-                if fv < 0:
-                    v_u = -v_u
                 if t0 is None:
                     t0 = t_us
                 x = (t_us - t0) // 1_000_000  # whole seconds, like batch
@@ -551,13 +508,7 @@ def streaming_trend_slope(
                 [(uid, n, slope)], columns=["user_id", "n", "slope_nano"]
             )
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        trend_fn,
-        outputStructType=TREND_SCHEMA,
-        stateStructType=TREND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _per_key(events, key_col, trend_fn, TREND_SCHEMA, TREND_STATE_SCHEMA)
 
 
 FUNNEL_SCHEMA = StructType(
@@ -630,10 +581,4 @@ def streaming_funnel(
         if out:
             yield pd.DataFrame(out, columns=["user_id", "step", "ts"])
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        funnel_fn,
-        outputStructType=FUNNEL_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _per_key(events, key_col, funnel_fn, FUNNEL_SCHEMA, FUNNEL_STATE_SCHEMA)

@@ -19,13 +19,14 @@ baseline being compared.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def pandas_flagship(sf_dir: str, replicate: int = 1) -> tuple[int, float]:

@@ -10,6 +10,7 @@ order-insensitive value hash. Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from datetime import datetime
@@ -17,7 +18,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from time_series_loader_spark.session import TABLES, get_spark

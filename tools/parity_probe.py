@@ -17,13 +17,14 @@ distance of each value to its nearest 6dp floor(x*1e6+0.5) boundary
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import datetime
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from time_series_loader_spark.session import TABLES, get_spark

@@ -14,11 +14,12 @@ Usage: python tools/perturbed_gate.py [sf_dir] [master] [shuffle_parts]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from time_series_loader_spark.session import TABLES, get_spark
