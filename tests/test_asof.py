@@ -1,5 +1,6 @@
 """Nearest/backward/forward as-of join vs pd.merge_asof."""
 
+import math
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -101,3 +102,15 @@ def test_distributed_buckets_match_merge_asof(spark):
                 assert g is None, direction
             else:
                 assert g == row["value"], direction
+
+
+def test_nan_row_value_is_returned(spark):
+    """Unlike the fills, the as-of match is row-level: a NaN value on the
+    nearest row is returned, as pd.merge_asof does."""
+    data = spark.createDataFrame(
+        [(datetime(2023, 1, 1, 0), 1.0), (datetime(2023, 1, 1, 2), float("nan"))],
+        "ts TIMESTAMP, value DOUBLE",
+    )
+    targets = spark.createDataFrame([(datetime(2023, 1, 1, 2, 10),)], "ts TIMESTAMP")
+    out = asof_nearest(targets, data, "ts", ["value"], direction="backward").collect()
+    assert math.isnan(out[0]["value"])

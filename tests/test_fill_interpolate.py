@@ -120,3 +120,58 @@ def test_distributed_interpolate_matches_pandas_many_buckets(spark, limit):
     exp = _pandas_series_from(values).interpolate(method="time", limit=limit).tolist()
     for g, e in zip(got, exp):
         assert (g is None and np.isnan(e)) or g == pytest.approx(e), (got, exp)
+
+
+NAN_VALUES = [1.0, float("nan"), None, 4.0, None, float("nan"), None]
+
+
+@pytest.mark.parametrize("shape", ["unkeyed", "buckets3", "keyed"])
+def test_nan_is_missing_in_fills_and_interpolate(spark, shape):
+    """pandas treats NaN as missing: a NaN row takes the fill value, and a
+    row that nothing fills keeps its own value (null and NaN both read as
+    missing to pandas)."""
+    rows = [
+        ("a", datetime(2023, 1, 1) + timedelta(hours=i), v) for i, v in enumerate(NAN_VALUES)
+    ]
+    df = spark.createDataFrame(rows, "k STRING, ts TIMESTAMP, v DOUBLE")
+    kw = {"keyed": {"group_cols": ["k"]}, "buckets3": {"num_buckets": 3}}.get(shape, {})
+    nan = float("nan")
+    expected = {
+        ffill: [1, 1, 1, 4, 4, 4, 4],
+        bfill: [1, 4, 4, 4, nan, nan, nan],
+        interpolate_time: [1, 2, 3, 4, 4, 4, 4],
+    }
+    for fn, exp in expected.items():
+        got = [np.nan if g is None else g for g in _collect(fn(df, "ts", ["v"], **kw))]
+        np.testing.assert_allclose(got, exp, err_msg=fn.__name__)
+
+
+@pytest.mark.parametrize("limit", [None, 1, 2])
+@pytest.mark.parametrize("op", ["ffill", "bfill", "interpolate"])
+def test_keyed_fills_match_pandas_groupby(spark, op, limit):
+    """Keyed path vs pandas groupby: two series on interleaved, uneven
+    timestamps, with leading, inner and trailing null runs."""
+    series = {
+        "a": [None, 1.0, None, None, None, 5.0, None, None],
+        "b": [2.0, None, None, 3.0, None, None, None, 8.0],
+    }
+    rows = [
+        (k, datetime(2023, 1, 1) + timedelta(minutes=7 * i + (3 if k == "b" else 0) + i * i), v)
+        for k, vals in series.items()
+        for i, v in enumerate(vals)
+    ]
+    df = spark.createDataFrame(rows, "k STRING, ts TIMESTAMP, v DOUBLE")
+    fn = {"ffill": ffill, "bfill": bfill, "interpolate": interpolate_time}[op]
+    got = {
+        (r["k"], r["ts"]): r["v"]
+        for r in fn(df, "ts", ["v"], limit=limit, group_cols=["k"]).collect()
+    }
+    pdf = pd.DataFrame(rows, columns=["k", "ts", "v"]).set_index("ts")
+    g = pdf.groupby("k")["v"]
+    if op == "interpolate":
+        exp = g.transform(lambda s: s.interpolate(method="time", limit=limit))
+    else:
+        exp = getattr(g, op)(limit=limit)
+    for (k, ts), e in zip(zip(pdf["k"], pdf.index), exp):
+        v = got[(k, ts.to_pydatetime())]
+        assert (v is None and np.isnan(e)) or v == pytest.approx(e), (k, ts, v, e)

@@ -107,3 +107,8 @@ def test_profile_mean_skips_nan_and_propagates_inf(spark):
     prof = {r["column"]: r for r in profile_table(df, approx=False).collect()}
     assert prof["a"]["mean"] == pytest.approx(1.5)  # pandas mean of [1, NaN, 2]
     assert prof["b"]["mean"] == float("inf")
+    # the other facets skip NaN too: pandas describe gives count 2, max 2, std 0.7071
+    a = prof["a"]
+    assert (a["n_nonnull"], a["n_distinct"], a["min_str"], a["max_str"]) == (2, 2, "1.0", "2.0")
+    assert a["null_frac"] == pytest.approx(1 / 3)
+    assert a["stddev"] == pytest.approx(0.70710678)

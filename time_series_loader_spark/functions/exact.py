@@ -8,8 +8,9 @@ averages and counts doubles.
   NUMERIC_VALUE_OUT_OF_RANGE, never a silent null.
 - **NaN is missing**, like null (pandas ``skipna``): the cast nulls it
   (and ±Inf), so sums and means skip it unmasked; counts and callers
-  taking min/max/first/last mask it with :func:`present` (Spark orders
-  NaN above every double).
+  taking min/max/first/last or filling gaps mask it with :func:`present`
+  (Spark orders NaN above every double), or :func:`present_typed` for a
+  column of any type.
 - **±Inf, groupby rule** (pandas groupby/resample; the default): +Inf
   gives inf, −Inf gives −inf, both give NaN, detected by one
   order-irrelevant ``bit_or`` flag per group (a double ``sum`` flag is
@@ -47,6 +48,12 @@ def present(c: Column, inf_missing: bool = False) -> Column:
     if inf_missing:
         return F.when((c > -_INF) & (c < _INF), c)
     return F.when(~F.isnan(c), c)
+
+
+def present_typed(c: Column, dtype: str) -> Column:
+    """:func:`present` for a column of Spark type ``dtype``; only float
+    and double columns can hold NaN, the rest pass through."""
+    return present(c) if dtype in ("float", "double") else c
 
 
 def _propagate_inf(base: Column, c: Column) -> Column:

@@ -8,29 +8,25 @@ Spark lacks a native as-of join. This is the union-of-timelines composition
 (SURVEY.md §2.3 option (a)):
 
 1. union the target timestamps (tagged) with the data timestamps;
-2. ONE ascending sort; at every position the previous data ROW comes from
-   ``last(ignorenulls)`` over the preceding frame and the next data ROW
-   from ``first(ignorenulls)`` over the following frame — both frames share
-   the sort, so Spark runs a single Window operator. Rows travel as one
-   struct, so the match is ROW-level (pd.merge_asof semantics: the nearest
-   row's value is returned even when that value is null);
+2. at every position, the previous and next data ROW from
+   ``functions/bucketing.py::nearest_present`` in (ts, data-before-target)
+   order. Rows travel as one struct, so the match is ROW-level
+   (pd.merge_asof semantics: the nearest row's value is returned even when
+   that value is null or NaN);
 3. each target picks whichever neighbor is nearer (ties → earlier row).
 
-Cost: one sort over targets+data — O((n+m) log p) distributed vs the
-reference's O(n·m) loop. Keyed input partitions by the series key; UNKEYED
-input is bucketed by deterministic time ranges (``functions/bucketing.py``)
-with tiny prefix-scanned carry tables for the bucket-boundary neighbors —
-no single-partition funnel.
+Cost: one exchange and sort over targets+data — O((n+m) log p)
+distributed vs the reference's O(n·m) loop.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_buckets
+from time_series_loader_spark.functions.bucketing import nearest_present
 
 
 def _pick(
@@ -42,8 +38,8 @@ def _pick(
     tolerance_seconds: float | None,
 ) -> DataFrame:
     t = F.col(ts_col).cast("double")
-    prev_ts = F.col("_prev").getField("_ts")
-    next_ts = F.col("_next").getField("_ts")
+    prev_ts = F.col("_prev_row").getField("_ts")
+    next_ts = F.col("_next_row").getField("_ts")
     d_prev = t - prev_ts.cast("double")
     d_next = next_ts.cast("double") - t
     exact = prev_ts.isNotNull() & (d_prev == 0)
@@ -65,8 +61,8 @@ def _pick(
 
     picked = []
     for c in value_cols:
-        prev_v = F.when(prev_ok, F.col("_prev").getField(c))
-        next_v = F.when(next_ok, F.col("_next").getField(c))
+        prev_v = F.when(prev_ok, F.col("_prev_row").getField(c))
+        next_v = F.when(next_ok, F.col("_next_row").getField(c))
         if direction == "backward":
             expr = prev_v
         else:
@@ -141,105 +137,15 @@ def asof_nearest(
     tagged_d = data.select(*gcols, ts_col, F.lit(0).alias("_is_target"), *value_cols)
     u = tagged_t.unionByName(tagged_d)
 
-    # the data ROW as one struct: non-null exactly for data rows, so
-    # last/first(ignorenulls) find the neighboring data row as a whole
+    # the data ROW as one struct: non-null exactly for data rows, so the
+    # nearest present anchor is the neighboring data row as a whole
     row_struct = F.when(
         F.col("_is_target") == 0,
         F.struct(F.col(ts_col).alias("_ts"), *[F.col(c) for c in value_cols]),
     )
-    order = [F.col(ts_col).asc(), F.col("_is_target").asc()]
-    # exact mirror of `order` (asc defaults NULLS FIRST, desc NULLS LAST,
-    # so reversing the direction reverses the total order exactly): the
-    # "next data row" is first(ignorenulls) over (1, unboundedFollowing)
-    # in `order`, but Spark executes an unboundedFollowing frame by
-    # re-scanning to the partition end for EVERY row (
-    # UnboundedFollowingWindowFunctionFrame) — O(rows²) per partition,
-    # measured 8.3 s vs 0.5 s on the sf0.1 asof slot alone. The same
-    # value is last(ignorenulls) over (unboundedPreceding, -1) in the
-    # REVERSED order — a growing frame Spark maintains incrementally
-    # (O(rows)). Costs one extra local sort in the same exchange.
-    order_rev = [F.col(ts_col).desc(), F.col("_is_target").desc()]
-
-    # unkeyed: deterministic time buckets + boundary carries; keyed (or
-    # degenerate unkeyed) input runs the plain window
-    bucketed = None if gcols else time_buckets(u, ts_col, num_buckets)
-    if bucketed is None:
-        w = (
-            Window.partitionBy(*gcols).orderBy(*order)
-            if gcols
-            else Window.orderBy(*order)
-        )
-        w_rev = (
-            Window.partitionBy(*gcols).orderBy(*order_rev)
-            if gcols
-            else Window.orderBy(*order_rev)
-        )
-        enriched = u.select(
-            *u.columns,
-            F.last(row_struct, ignorenulls=True)
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("_prev"),
-            F.last(row_struct, ignorenulls=True)
-            .over(w_rev.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("_next"),
-        ).where(F.col("_is_target") == 1)
-        return _pick(enriched, ts_col, value_cols, gcols, direction, tolerance_seconds)
-
-    w = Window.partitionBy("_pid").orderBy(*order)
-    w_rev = Window.partitionBy("_pid").orderBy(*order_rev)
-
-    # one agg scan: per bucket, the last and first DATA row (by ts, data
-    # rows only) — the cross-bucket neighbor carries
-    data_ts = F.when(F.col("_is_target") == 0, F.col(ts_col))
-    stats = bucketed.groupBy("_pid").agg(
-        F.max_by(row_struct, data_ts).alias("_last_data"),
-        F.min_by(row_struct, data_ts).alias("_first_data"),
+    near = nearest_present(
+        u, ts_col, {"row": row_struct}, sides=("prev", "next"), tiebreak=["_is_target"],
+        group_cols=gcols, num_buckets=num_buckets,
     )
-    stats_rows = sorted(stats.collect(), key=lambda r: r["_pid"])
-
-    prev_carry, nxt_carry = [], []
-    cur = None
-    for r in stats_rows:
-        prev_carry.append((r["_pid"], cur))
-        if r["_last_data"] is not None:
-            cur = r["_last_data"]
-    cur = None
-    for r in reversed(stats_rows):
-        nxt_carry.append((r["_pid"], cur))
-        if r["_first_data"] is not None:
-            cur = r["_first_data"]
-
-    struct_ddl = "STRUCT<_ts: TIMESTAMP, " + ", ".join(
-        f"{c}: {dict(data.dtypes)[c]}" for c in value_cols
-    ) + ">"
-    spark = u.sparkSession
-    pc = spark.createDataFrame(
-        [(pid, tuple(s) if s is not None else None) for pid, s in prev_carry],
-        f"_pid INT, _pcarry {struct_ddl}",
-    )
-    nc = spark.createDataFrame(
-        [(pid, tuple(s) if s is not None else None) for pid, s in nxt_carry],
-        f"_pid INT, _ncarry {struct_ddl}",
-    )
-
-    enriched = (
-        bucketed.join(F.broadcast(pc), "_pid", "left")
-        .join(F.broadcast(nc), "_pid", "left")
-        .select(
-            *u.columns,
-            F.coalesce(
-                F.last(row_struct, ignorenulls=True).over(
-                    w.rowsBetween(Window.unboundedPreceding, 0)
-                ),
-                F.col("_pcarry"),
-            ).alias("_prev"),
-            F.coalesce(
-                F.last(row_struct, ignorenulls=True).over(
-                    w_rev.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.col("_ncarry"),
-            ).alias("_next"),
-        )
-        .where(F.col("_is_target") == 1)
-    )
-    return _pick(enriched, ts_col, value_cols, (), direction, tolerance_seconds)
+    enriched = near.where(F.col("_is_target") == 1)
+    return _pick(enriched, ts_col, value_cols, gcols, direction, tolerance_seconds)

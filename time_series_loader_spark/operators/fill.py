@@ -3,187 +3,22 @@
 Parity target: reference ``load_file.py:2341-2345``
 (``fillna(method='ffill'/'bfill', limit=n)`` after grid reindex).
 
-Spark-first design (SURVEY.md §4 "custom composition"):
-- unlimited fill: ``last(col, ignorenulls=True)`` over an unbounded-
-  preceding window — one pass, JVM-side.
-- ``limit=n``: pandas fills at most n consecutive nulls after each non-null
-  source. The null-run position is computed with a run-id window (count of
-  non-nulls so far) + row_number within the run.
-
-Scale: with ``group_cols`` the windows hash-partition by the series key.
-WITHOUT a key (the reference's one-global-timeline model) the fill does
-NOT collapse to one partition: rows are bucketed by a deterministic time
-range (``functions/bucketing.py``), the fill runs per bucket, and bucket
-boundaries are stitched with a prefix-scanned carry table — per bucket and
-column: the last (resp. first) non-null value, and for ``limit`` the
-null-run length flowing out of the bucket. The carry table is one row per
-bucket (tens to thousands), scanned on the driver.
+Each column takes the nearest present value before (ffill) or after
+(bfill) it from ``functions/bucketing.py::nearest_present``; ``limit=n``
+fills at most n consecutive missing rows after each source, counted by
+the helper's run length. NaN is missing like null (pandas rule): a NaN
+row takes the fill value, and a row nothing fills keeps its own value.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.bucketing import time_buckets
-
-
-def _single_partition_fill(
-    df: DataFrame,
-    ts_col: str,
-    cols: Sequence[str],
-    limit: int | None,
-    group_cols: Sequence[str],
-    backward: bool,
-) -> DataFrame:
-    order = F.col(ts_col).desc() if backward else F.col(ts_col).asc()
-    w = (
-        Window.partitionBy(*group_cols).orderBy(order)
-        if group_cols
-        else Window.orderBy(order)
-    )
-    w_prec = w.rowsBetween(Window.unboundedPreceding, 0)
-    out = df
-    for c in cols:
-        filled = F.last(c, ignorenulls=True).over(w_prec)
-        if limit is None:
-            out = out.withColumn(c, filled)
-        else:
-            run_id = F.count(F.when(F.col(c).isNotNull(), 1)).over(w_prec)
-            run_w = (
-                Window.partitionBy(*group_cols, run_id)
-                if group_cols
-                else Window.partitionBy(run_id)
-            ).orderBy(order)
-            dist = F.row_number().over(run_w) - 1
-            out = out.withColumn(
-                c,
-                F.when(F.col(c).isNotNull(), F.col(c)).otherwise(
-                    F.when(dist <= limit, filled)
-                ),
-            )
-    return out
-
-
-def _distributed_fill(
-    df: DataFrame,
-    ts_col: str,
-    cols: Sequence[str],
-    limit: int | None,
-    backward: bool,
-    num_buckets: int | None,
-) -> Optional[DataFrame]:
-    """Unkeyed fill over time buckets + cross-bucket carry. Returns None
-    when the input is degenerate (empty / zero span) — caller falls back."""
-    bucketed = time_buckets(df, ts_col, num_buckets)
-    if bucketed is None:
-        return None
-    order = F.col(ts_col).desc() if backward else F.col(ts_col).asc()
-    w_local = Window.partitionBy("_pid").orderBy(order)
-    w_prec = w_local.rowsBetween(Window.unboundedPreceding, 0)
-
-    # Per-bucket carry stats from ONE cheap aggregation scan (no sort):
-    #   carry value = last (dir-wise) non-null in the bucket; its ts; row
-    #   count — enough to prefix-scan carries and, with a second light agg,
-    #   run lengths for `limit`.
-    nn_ts = {c: F.when(F.col(c).isNotNull(), F.col(ts_col)) for c in cols}
-    pick = F.max_by if not backward else F.min_by
-    edge = F.max if not backward else F.min
-    stats = bucketed.groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        *[pick(F.col(c), nn_ts[c]).alias(f"_val_{c}") for c in cols],
-        *[edge(nn_ts[c]).alias(f"_nnts_{c}") for c in cols],
-    )
-
-    need_dist = limit is not None
-    rows_out: dict[int, dict[str, int]] = {}
-    if need_dist:
-        # rows past the carry source inside its own bucket (null-run tail)
-        conds = [
-            F.sum(
-                F.when(
-                    (F.col(ts_col) > F.col(f"_nnts_{c}"))
-                    if not backward
-                    else (F.col(ts_col) < F.col(f"_nnts_{c}")),
-                    1,
-                ).otherwise(0)
-            ).alias(f"_after_{c}")
-            for c in cols
-        ]
-        joined = bucketed.join(
-            F.broadcast(stats.select("_pid", *[f"_nnts_{c}" for c in cols])), "_pid"
-        )
-        # ONE driver round-trip fetches carry stats AND null-run tails
-        # (r15, VERDICT r14 #5): the tails aggregation is joined back to
-        # the bucket-sized stats frame and a single collect serves both
-        # scans below — expressions, join keys and therefore every value
-        # are identical to the former two-collect form; only the number
-        # of scheduling rounds changes. Inner join: both sides carry
-        # exactly the set of non-empty bucket ids.
-        tails = joined.groupBy("_pid").agg(*conds)
-        stats_rows = stats.join(tails, "_pid").collect()
-        rows_out = {
-            r["_pid"]: {c: r[f"_after_{c}"] for c in cols} for r in stats_rows
-        }
-    else:
-        stats_rows = stats.collect()
-    stats_rows = sorted(stats_rows, key=lambda r: r["_pid"], reverse=backward)
-
-    # Prefix scan in direction order: for each bucket, the nearest source
-    # value among preceding buckets + accumulated null-run distance.
-    carry_rows = []
-    carry_val: dict[str, object] = {c: None for c in cols}
-    carry_dist: dict[str, Optional[int]] = {c: None for c in cols}
-    for r in stats_rows:
-        carry_rows.append(
-            (
-                r["_pid"],
-                *[carry_val[c] for c in cols],
-                *[carry_dist[c] for c in cols],
-            )
-        )
-        for c in cols:
-            if r[f"_val_{c}"] is not None:
-                carry_val[c] = r[f"_val_{c}"]
-                carry_dist[c] = rows_out.get(r["_pid"], {}).get(c, 0) if need_dist else 0
-            elif carry_dist[c] is not None:
-                carry_dist[c] += r["_cnt"]
-
-    dtypes = dict(df.dtypes)
-    schema = (
-        "_pid INT, "
-        + ", ".join(f"_carry_{c} {dtypes[c]}" for c in cols)
-        + ", "
-        + ", ".join(f"_cdist_{c} BIGINT" for c in cols)
-    )
-    carry_df = df.sparkSession.createDataFrame(carry_rows, schema)
-
-    out = bucketed.join(F.broadcast(carry_df), "_pid", "left")
-    rn = F.row_number().over(w_local)
-    for c in cols:
-        local_fill = F.last(c, ignorenulls=True).over(w_prec)
-        has_local_src = F.count(F.when(F.col(c).isNotNull(), 1)).over(w_prec) > 0
-        carry_v = F.col(f"_carry_{c}")
-        if limit is None:
-            expr = (
-                F.when(F.col(c).isNotNull(), F.col(c))
-                .when(has_local_src, local_fill)
-                .otherwise(carry_v)
-            )
-        else:
-            run_id = F.count(F.when(F.col(c).isNotNull(), 1)).over(w_prec)
-            run_w = Window.partitionBy("_pid", run_id).orderBy(order)
-            dist_local = F.row_number().over(run_w) - 1
-            dist_carry = F.col(f"_cdist_{c}") + rn
-            expr = (
-                F.when(F.col(c).isNotNull(), F.col(c))
-                .when(has_local_src, F.when(dist_local <= limit, local_fill))
-                .otherwise(F.when(dist_carry <= limit, carry_v))
-            )
-        out = out.withColumn(c, expr)
-    return out.drop("_pid", *[f"_carry_{c}" for c in cols], *[f"_cdist_{c}" for c in cols])
+from time_series_loader_spark.functions.bucketing import nearest_present
+from time_series_loader_spark.functions.exact import present_typed
 
 
 def _fill(
@@ -195,12 +30,20 @@ def _fill(
     backward: bool,
     num_buckets: int | None = None,
 ) -> DataFrame:
-    if group_cols:
-        return _single_partition_fill(df, ts_col, cols, limit, group_cols, backward)
-    out = _distributed_fill(df, ts_col, cols, limit, backward, num_buckets)
-    if out is None:
-        return _single_partition_fill(df, ts_col, cols, limit, (), backward)
-    return out
+    side = "next" if backward else "prev"
+    dtypes = dict(df.dtypes)
+    anchors = {c: present_typed(F.col(c), dtypes[c]) for c in cols}
+    near = nearest_present(
+        df, ts_col, anchors, sides=(side,), run_side=None if limit is None else side,
+        group_cols=group_cols, num_buckets=num_buckets,
+    )
+    near_v = {
+        c: F.col(f"_{side}_{c}") if limit is None
+        else F.when(F.col(f"_run_{c}") <= limit, F.col(f"_{side}_{c}"))
+        for c in cols
+    }
+    filled = {c: F.coalesce(a, near_v[c], F.col(c)) for c, a in anchors.items()}
+    return near.withColumns(filled).select(*df.columns)
 
 
 def ffill(

@@ -22,7 +22,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.exact import exact_mean
+from time_series_loader_spark.functions.exact import exact_mean, present_typed
 
 # one source of truth for "numeric dtype" across the engine — resample
 # and the profiler must agree on which columns get means
@@ -85,7 +85,7 @@ def profile_table(
     aggs: list[Column] = [F.count(F.lit(1)).alias("_n_rows")]
     nd_aggs: list[Column] = []
     for c in cols:
-        col = F.col(c)
+        col = present_typed(F.col(c), dtypes[c])  # NaN is missing, like null
         aggs.append(F.count(col).alias(f"_nn_{c}"))
         # complex types get a canonical-JSON digest as their distinct key;
         # gate on isNotNull so a null value doesn't serialize to a

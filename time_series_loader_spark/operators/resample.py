@@ -29,7 +29,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from time_series_loader_spark.functions.exact import exact_mean, exact_sum, present
+from time_series_loader_spark.functions.exact import exact_mean, exact_sum, present_typed
 from time_series_loader_spark.functions.frequency import freq_to_seconds
 
 _NUMERIC_TYPES = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
@@ -55,7 +55,7 @@ def _agg_expr(col: str, method: str, ts_col: str, skipna: bool, dtype: str = "do
     raw = F.col(col)
     integral = dtype in ("int", "bigint", "smallint", "tinyint")
     # pandas groupby rules (functions/exact.py): NaN is missing everywhere
-    c = present(raw) if dtype in ("float", "double") else raw
+    c = present_typed(raw, dtype)
     if method == "mean":
         base = F.sum(c).cast("double") / F.count(c) if integral else exact_mean(raw)
     elif method == "sum":

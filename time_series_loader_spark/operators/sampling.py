@@ -13,7 +13,7 @@ Beyond-reference capability (BASELINE.json north star): the two ops every
 - **Token-budget shard packing**: assign documents (ordered by a
   deterministic key) to consecutive shards of ~``budget`` tokens. The
   naive form is a single-partition running sum over the whole corpus; here
-  it is the distributed prefix-scan shape (same as operators/fill.py):
+  it is the distributed prefix-scan shape (same as functions/bucketing.py):
   range-bucket the key space, per-bucket token sums (tiny — one row per
   bucket) collected and prefix-summed on the driver, broadcast offsets,
   then a WITHIN-bucket window cumsum. No global-order exchange; the only
