@@ -622,27 +622,6 @@ WHERE mad.mv IS NULL OR mad.mv = 0 OR e.value IS NULL
 """
 
 
-def q_coerce_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1 errors='coerce' numeric coercion (reference ts_extensions.py:41-44)
-    via try_cast: extract the numeric k from the props string; event_type
-    (non-numeric) coerces to null."""
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.regexp_extract("props", "[0-9]+", 0).try_cast("double").alias("k_value"),
-        F.col("event_type").try_cast("double").alias("event_type_coerced"),
-    )
-
-
-SQL_coerce_numeric = """
-SELECT event_id,
-       TRY_CAST(regexp_extract(props, '[0-9]+') AS DOUBLE) AS k_value,
-       TRY_CAST(event_type AS DOUBLE) AS event_type_coerced
-FROM events
-"""
-
-
 def q_interval_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6 interval gap/overlap classification at DataFrame scale
     (reference ts_validator.py:113-189): per-user activity intervals,
@@ -4468,35 +4447,6 @@ SELECT floor((CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(27,6))) AS D
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
   AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24
-"""
-
-
-def q_ntile_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking-function surface (SURVEY.md §2.5): quartiles + rank + lag
-    over customer balances within nation."""
-    _prep(spark)
-    c = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey").asc()
-    )
-    return c.select(
-        "c_custkey",
-        "c_nationkey",
-        _r6(F.col("c_acctbal"), "c_acctbal"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.rank().over(w).alias("rnk"),
-        _r6(F.lag("c_acctbal").over(w), "prev_bal"),
-    )
-
-
-SQL_ntile_pct = """
-SELECT c_custkey, c_nationkey,
-       floor((c_acctbal)*1000000 + 0.5)/1000000 AS c_acctbal,
-       ntile(4) OVER w AS quartile,
-       rank() OVER w AS rnk,
-       floor((lag(c_acctbal) OVER w)*1000000 + 0.5)/1000000 AS prev_bal
-FROM customer
-WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC)
 """
 
 

@@ -49,6 +49,24 @@ def test_tolerance(spark):
     assert out[datetime(2023, 1, 1, 2)] is None
     # 00:00 nearest is 00:05 (300s) → kept
     assert out[datetime(2023, 1, 1, 0)] == pytest.approx(5.0)
+    # a neighbour exactly at a sub-second tolerance is kept (pandas rule):
+    # distances compare in integer µs, not double epochs
+    data, targets = _equidistant(spark)
+    back = asof_nearest(
+        targets, data, "ts", ["value"], direction="backward", tolerance_seconds=9.549657
+    ).collect()
+    assert back[0]["value"] == 1.0
+
+
+def _equidistant(spark):
+    """Rows 9.549657 s either side of a µs-fraction target: a double epoch
+    at 2023 dates rounds the two distances apart."""
+    target = datetime(2023, 1, 1, 0, 2, 24, 272509)
+    step = timedelta(seconds=9, microseconds=549657)
+    data = spark.createDataFrame(
+        [(target - step, 1.0), (target + step, 2.0)], "ts TIMESTAMP, value DOUBLE"
+    )
+    return data, spark.createDataFrame([(target,)], "ts TIMESTAMP")
 
 
 def test_tie_prefers_earlier(spark):
@@ -57,8 +75,9 @@ def test_tie_prefers_earlier(spark):
         "ts TIMESTAMP, value DOUBLE",
     )
     targets = spark.createDataFrame([(datetime(2023, 1, 1, 1, 0),)], "ts TIMESTAMP")
-    out = asof_nearest(targets, data, "ts", ["value"]).collect()
-    assert out[0]["value"] == 1.0
+    for d, t in ((data, targets), _equidistant(spark)):
+        out = asof_nearest(t, d, "ts", ["value"]).collect()
+        assert out[0]["value"] == 1.0
 
 
 def test_row_level_match_with_null_values(spark):

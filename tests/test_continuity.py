@@ -2,6 +2,7 @@
 
 from datetime import datetime, timedelta
 
+import pandas as pd
 import pytest
 
 from time_series_loader_spark.operators.continuity import (
@@ -108,3 +109,30 @@ def test_distributed_prev_degenerate_cases(spark):
     # single row
     df1 = spark.createDataFrame([(datetime(2023, 1, 1),)], "ts TIMESTAMP")
     assert with_time_diff(df1, "ts").collect()[0]["diff_seconds"] is None
+
+
+def test_sub_second_steps_match_pandas(spark):
+    """µs-fraction steps: frequency, gaps and coverage equal pandas'
+    ``diff().dt.total_seconds()`` arithmetic, keyed and unkeyed."""
+    offs = [0, 100001, 200003, 300004, 2000007]
+    ts = [datetime(2023, 1, 1) + timedelta(microseconds=o) for o in offs]
+    d = pd.Series(pd.to_datetime(ts)).diff().dt.total_seconds().dropna()
+    gaps = d[d > 0.1]
+    assert d.median() == pytest.approx(0.1000015, rel=1e-12)
+    assert list(gaps) == [0.100001, 0.100002, 0.100001, 1.700003]
+    for keys in ([], ["k"]):
+        rows = [(k, t) for k in ("a", "b")[: len(keys) + 1] for t in ts]
+        df = spark.createDataFrame(rows, "k STRING, ts TIMESTAMP")
+        freq = infer_frequency_seconds(df, "ts", keys).collect()
+        assert [r["freq_seconds"] for r in freq] == [pytest.approx(d.median(), rel=1e-12)] * len(freq)
+        got = find_gaps(df, "ts", expected_freq=0.1, group_cols=keys).orderBy(*keys, "gap_end")
+        per_series = [(r["gap_seconds"], r["expected_points"]) for r in got.collect()]
+        assert per_series == [(g, int(g / 0.1) - 1) for g in gaps] * len(freq)
+        assert [p for _, p in per_series[:4]] == [0, 0, 0, 16]
+        for s in continuity_stats(df, "ts", 0.1, group_cols=keys).collect():
+            assert s["n_gaps"] == 4
+            assert s["gap_seconds_total"] == pytest.approx(gaps.sum(), rel=1e-12)
+            assert s["span_seconds"] == pytest.approx(2.000007, rel=1e-12)
+            assert s["coverage_pct"] == pytest.approx(0.0, abs=1e-12)
+        inferred = continuity_stats(df, "ts", None, group_cols=keys).collect()
+        assert [r["freq_seconds"] for r in inferred] == [pytest.approx(d.median(), rel=1e-12)] * len(freq)

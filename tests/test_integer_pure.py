@@ -140,6 +140,9 @@ def test_stats_exact_no_gaps_and_single_row(spark):
     one = spark.createDataFrame([(datetime(2023, 1, 1),)], "ts TIMESTAMP")
     s1 = continuity_stats_exact(one, "ts", gap_threshold_us=1).collect()[0]
     assert s1["span_us"] == 0 and s1["coverage_micropct"] == 100_000_000
+    # the auto threshold follows the same rule: no steps → 0 gaps, not NULL
+    a1 = continuity_stats_exact(one, "ts").collect()[0]
+    assert a1["n_gaps"] == 0 and a1["gap_total_us"] == 0 and a1["n_rows"] == 1
 
 
 # ----------------------------------------------------- µunit counter sums
@@ -346,6 +349,8 @@ def test_stats_exact_auto_threshold_keyed(spark):
         [("a", base + timedelta(seconds=s)) for s in [0, 10, 20, 30, 330, 340, 350]]
         # series b: 60s spacing, no gap beyond 10×median
         + [("b", base + timedelta(seconds=60 * i)) for i in range(6)]
+        # series c: one row, no steps — kept, with no gaps
+        + [("c", base)]
     )
     df = spark.createDataFrame(rows, "k STRING, ts TIMESTAMP")
     out = {
@@ -356,6 +361,8 @@ def test_stats_exact_auto_threshold_keyed(spark):
     assert out["a"]["n_gaps"] == 1 and out["a"]["gap_total_us"] == 300 * 1_000_000
     assert out["b"]["freq_us_x2"] == 2 * 60 * 1_000_000
     assert out["b"]["n_gaps"] == 0 and out["b"]["coverage_micropct"] == 100_000_000
+    assert out["c"]["n_rows"] == 1 and out["c"]["freq_us_x2"] is None
+    assert out["c"]["n_gaps"] == 0 and out["c"]["coverage_micropct"] == 100_000_000
 
 
 def test_stats_exact_auto_matches_fixed(spark, sf_dir):

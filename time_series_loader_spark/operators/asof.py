@@ -37,11 +37,13 @@ def _pick(
     direction: str,
     tolerance_seconds: float | None,
 ) -> DataFrame:
-    t = F.col(ts_col).cast("double")
+    # distances in integer epoch µs: a double epoch (ulp ~2.4e-7 s at 2023
+    # dates) makes equidistant µs neighbours compare unequal
+    t = F.unix_micros(F.col(ts_col))
     prev_ts = F.col("_prev_row").getField("_ts")
     next_ts = F.col("_next_row").getField("_ts")
-    d_prev = t - prev_ts.cast("double")
-    d_next = next_ts.cast("double") - t
+    d_prev = t - F.unix_micros(prev_ts)
+    d_next = F.unix_micros(next_ts) - t
     exact = prev_ts.isNotNull() & (d_prev == 0)
 
     if direction == "backward":
@@ -52,7 +54,7 @@ def _pick(
         use_prev = prev_ts.isNotNull() & (next_ts.isNull() | (d_prev <= d_next))
 
     if tolerance_seconds is not None:
-        tol = F.lit(float(tolerance_seconds))
+        tol = F.lit(round(tolerance_seconds * 1e6))
         prev_ok = prev_ts.isNotNull() & (d_prev <= tol)
         next_ok = next_ts.isNotNull() & (d_next <= tol)
     else:
@@ -87,12 +89,12 @@ def nearest_at_points(
     ``ts``. Intended for ≤ a few hundred points (one aggregate expression
     each); beyond that use :func:`asof_nearest`.
     """
-    t = F.col(ts_col).cast("double")
+    t = F.unix_micros(F.col(ts_col))
     aggs = []
     for i, p in enumerate(points):
-        # epoch via a Spark literal cast so the session timezone applies
+        # epoch µs via a Spark literal cast so the session timezone applies
         # (python datetime.timestamp() would use the system tz instead)
-        d = F.abs(t - F.lit(p).cast("timestamp").cast("double"))
+        d = F.abs(t - F.unix_micros(F.lit(p).cast("timestamp")))
         key = F.struct(d.alias("d"), F.col(ts_col).alias("t"))
         aggs.append(
             F.min_by(F.struct(*[F.col(c) for c in value_cols]), key).alias(f"_n{i}")

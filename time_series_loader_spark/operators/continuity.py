@@ -8,12 +8,23 @@ Parity targets (reference ``load_file.py:2024-2125``):
   ``load_file.py:2063-2074``)
 - A3 continuity statistics (``load_file.py:2094-2111``)
 
-Spark-first notes: one lag pass computes the previous timestamp. Every
-function takes ``group_cols`` (series key) to partition the window; with
-a key the plan is a standard hash-partitioned window (SURVEY.md §7
-hard-part (d)). Unkeyed input (the reference's one-global-timeline model)
-is spread over deterministic time buckets with a boundary carry
-(``functions/bucketing.py``), so it never funnels through one partition.
+One integer step pass: :func:`_steps` is the module's only lag. It adds
+``_prev_ts`` and ``_du`` = ``unix_micros(ts) - unix_micros(_prev_ts)``, the
+step in epoch microseconds as a BIGINT. Frequency, gap counts and coverage
+come from one statistics body (:func:`_stats`) over the distinct-step
+distribution, where a step is a gap when ``_du > m·median + add``. The
+public functions are views of these two pieces that only convert units:
+seconds are ``_du / 1e6`` at the output, and a threshold given in seconds
+is compared in half-µs, so sub-second data classifies and sums like
+pandas' integer ``Timedelta`` arithmetic. The float and the integer-exact
+forms therefore agree by construction.
+
+Spark-first notes: every function takes ``group_cols`` (series key) to
+partition the window; with a key the plan is a standard hash-partitioned
+window (SURVEY.md §7 hard-part (d)). Unkeyed input (the reference's
+one-global-timeline model) is spread over deterministic time buckets with
+a boundary carry (``functions/bucketing.py``), so it never funnels through
+one partition.
 """
 
 from __future__ import annotations
@@ -24,7 +35,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_loader_spark.functions.bucketing import shift_in_time
-from time_series_loader_spark.functions.exact import exact_sum
 from time_series_loader_spark.functions.frequency import freq_to_seconds
 
 
@@ -38,45 +48,96 @@ def _freq_float(freq: str | int | float) -> float:
     return float(freq_to_seconds(freq))
 
 
-def _with_prev_ts(
+def _x2(freq: str | int | float) -> int:
+    """A duration in half-µs, the unit thresholds are compared in
+    (against ``2·_du``): exact for a µs step and for a median that falls
+    between two steps (``freq_us_x2 / 2e6`` seconds)."""
+    return round(_freq_float(freq) * 2e6)
+
+
+def _steps(
+    df: DataFrame,
+    ts_col: str,
+    group_cols: Sequence[str] = (),
+    num_buckets: int | None = None,
+    slim: bool = True,
+) -> DataFrame:
+    """The one step pass: adds ``_prev_ts`` (the previous row's timestamp
+    in time order, keyed or bucketed — functions/bucketing.py) and ``_du``
+    (BIGINT µs step, null on each series' first row). ``slim`` projects to
+    the key and timestamp first, so the window shuffle carries 8 bytes a
+    row, not rows."""
+    if slim:
+        df = df.select(*group_cols, ts_col)
+    prev = shift_in_time(
+        df, ts_col, ts_col, "_prev_ts", group_cols=group_cols, num_buckets=num_buckets
+    )
+    du = F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col("_prev_ts"))
+    return prev.withColumn("_du", du)
+
+
+def _distribution(df: DataFrame, ts_col: str, group_cols: Sequence[str]) -> DataFrame:
+    """(group_cols..., ``_du``, ``_c`` count, ``_t0``/``_t1`` ts extrema)
+    per distinct step — small for real telemetry (bounded by distinct
+    spacings, not rows) and map-side combined. The null step of each
+    series' first row is a group too, so every row is counted once and a
+    one-row series is still present."""
+    ts = F.col(ts_col)
+    return (
+        _steps(df, ts_col, group_cols)
+        .groupBy(*group_cols, "_du")
+        .agg(F.count(F.lit(1)).alias("_c"), F.min(ts).alias("_t0"), F.max(ts).alias("_t1"))
+    )
+
+
+def _with_median(dist: DataFrame, group_cols: Sequence[str]) -> DataFrame:
+    """Adds ``freq_us_x2`` to every row of the step distribution: the sum
+    of the two middle order statistics of the series' non-null steps —
+    see :func:`infer_frequency_us2`. Windows over the small distinct-step
+    frame, so no join and no collect."""
+    w = Window.partitionBy(*group_cols).orderBy("_du")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    steps = F.when(F.col("_du").isNotNull(), F.col("_c"))
+    cum = dist.select("*", F.sum(steps).over(w).alias("_hi"), F.sum(steps).over(whole).alias("_n"))
+
+    # ranks of the two middle order statistics, 1-indexed: (n+1) div 2
+    # and (n+2) div 2 — integer division, exact
+    def middle(rank: str):
+        return F.min(F.when(F.col("_hi") >= F.expr(rank), F.col("_du"))).over(whole)
+
+    f2 = (middle("(_n + 1) div 2") + middle("(_n + 2) div 2")).cast("long")
+    return cum.select(*dist.columns, f2.alias("freq_us_x2"))
+
+
+def _stats(
     df: DataFrame,
     ts_col: str,
     group_cols: Sequence[str],
-    num_buckets: int | None = None,
+    add_x2: int,
+    multiple: int | None = None,
 ) -> DataFrame:
-    """Add ``_prev_ts`` = the previous row's timestamp in time order
-    (keyed, or bucketed over the global timeline — functions/bucketing.py)."""
-    return shift_in_time(
-        df, ts_col, ts_col, "_prev_ts", group_cols=group_cols, num_buckets=num_buckets
-    )
-
-
-def _median_us2(dd: DataFrame, group_cols: Sequence[str]) -> DataFrame:
-    """(group_cols..., ``freq_us_x2``) from the delta distribution ``dd``
-    = (group_cols..., ``_du``, ``_c`` count): the sum of the two middle
-    order statistics — see :func:`infer_frequency_us2`."""
-    w = (
-        Window.partitionBy(*group_cols).orderBy("_du")
-        if group_cols
-        else Window.orderBy("_du")
-    )
-    cum = dd.select(
-        *group_cols,
-        "_du",
-        F.sum("_c").over(w).alias("_hi"),
-        F.sum("_c").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("_n"),
-    )
-    # ranks of the two middle order statistics, 1-indexed: (n+1) div 2
-    # and (n+2) div 2 — integer division, exact
-    r1 = F.expr("(_n + 1) div 2")
-    r2 = F.expr("(_n + 2) div 2")
-    lo = F.min(F.when(F.col("_hi") >= r1, F.col("_du"))).alias("_lo")
-    hi = F.min(F.when(F.col("_hi") >= r2, F.col("_du"))).alias("_hi2")
-    agg = cum.groupBy(*group_cols).agg(lo, hi) if group_cols else cum.agg(lo, hi)
-    return agg.select(
-        *group_cols, (F.col("_lo") + F.col("_hi2")).cast("long").alias("freq_us_x2")
+    """The one statistics body: (group_cols..., ``start_time``,
+    ``end_time``, ``n_rows``, ``n_gaps``, ``gap_total_us``) plus
+    ``freq_us_x2`` when ``multiple`` is given. A step is a gap when
+    ``2·_du > multiple·freq_us_x2 + add_x2`` — ``_du > m·median + add``
+    in half-µs; without ``multiple`` the threshold is ``add_x2`` alone.
+    One lag pass and one aggregate over the distinct-step distribution;
+    a series with no steps has 0 gaps."""
+    dist = _distribution(df, ts_col, group_cols)
+    thr = F.lit(add_x2)
+    extra = []
+    if multiple is not None:
+        dist = _with_median(dist, group_cols)
+        thr = F.col("freq_us_x2") * F.lit(int(multiple)) + thr
+        extra = [F.min("freq_us_x2").alias("freq_us_x2")]
+    gap = F.col("_du") * 2 > thr
+    return dist.groupBy(*group_cols).agg(
+        F.min("_t0").alias("start_time"),
+        F.max("_t1").alias("end_time"),
+        F.coalesce(F.sum("_c"), F.lit(0)).alias("n_rows"),
+        F.coalesce(F.sum(F.when(gap, F.col("_c"))), F.lit(0)).alias("n_gaps"),
+        F.coalesce(F.sum(F.when(gap, F.col("_du") * F.col("_c"))), F.lit(0)).alias("gap_total_us"),
+        *extra,
     )
 
 
@@ -88,10 +149,8 @@ def with_time_diff(
     num_buckets: int | None = None,
 ) -> DataFrame:
     """W1: per-row delta to the previous row, in (fractional) seconds."""
-    out = _with_prev_ts(df, ts_col, group_cols, num_buckets)
-    # Subsecond-exact: cast both to double epoch before differencing.
-    delta = F.col(ts_col).cast("double") - F.col("_prev_ts").cast("double")
-    return out.withColumn(diff_col, delta).drop("_prev_ts")
+    out = _steps(df, ts_col, group_cols, num_buckets, slim=False)
+    return out.withColumn(diff_col, F.col("_du") / 1e6).drop("_prev_ts", "_du")
 
 
 def infer_frequency_seconds(
@@ -106,26 +165,18 @@ def infer_frequency_seconds(
     ``pd.infer_freq`` fails (``load_file.py:2063-2074``); real-world spacing
     is rarely perfectly regular so the median IS the inference.
 
-    ``exact=True`` uses Spark's exact ``percentile`` (buffers every distinct
-    diff — right up to ~millions of rows, and required for oracle parity).
-    At larger scale pass ``exact=False``: ``percentile_approx`` with a
+    ``exact=True`` is :func:`infer_frequency_us2` in seconds
+    (``freq_us_x2 / 2e6``): the exact median, an even count taking the
+    midpoint of the two middle steps as pandas does. At larger scale pass
+    ``exact=False``: ``percentile_approx`` over the µs steps with a
     10k-centroid sketch — bounded memory, mergeable, ~4 significant digits.
     """
-    # project before the window: the diff shuffle should carry timestamps
-    # only, not the full row
-    slim = df.select(*group_cols, ts_col)
-    diffs = with_time_diff(slim, ts_col, group_cols).where(
-        F.col("diff_seconds").isNotNull()
-    )
     if exact:
-        agg = F.percentile(F.col("diff_seconds"), F.lit(0.5)).alias("freq_seconds")
-    else:
-        agg = F.percentile_approx(
-            F.col("diff_seconds"), F.lit(0.5), F.lit(10000)
-        ).alias("freq_seconds")
-    if group_cols:
-        return diffs.groupBy(*group_cols).agg(agg)
-    return diffs.agg(agg)
+        f2 = infer_frequency_us2(df, ts_col, group_cols)
+        return f2.select(*group_cols, (F.col("freq_us_x2") / 2e6).alias("freq_seconds"))
+    steps = _steps(df, ts_col, group_cols).where(F.col("_du").isNotNull())
+    med = F.percentile_approx(F.col("_du"), F.lit(0.5), F.lit(10000)) / 1e6
+    return steps.groupBy(*group_cols).agg(med.alias("freq_seconds"))
 
 
 def find_gaps(
@@ -141,20 +192,17 @@ def find_gaps(
     ``expected_points`` (= floor(delta/expected) - 1, reference
     ``load_file.py:2088-2091``), plus ``group_cols``.
     """
-    expected_s = _freq_float(expected_freq)
-    min_gap_s = _freq_float(min_gap) if min_gap else 0.0
-    # ts-only projection: the window shuffle carries 8 bytes/row, not rows
-    prev = _with_prev_ts(df.select(*group_cols, ts_col), ts_col, group_cols)
-    delta = F.col(ts_col).cast("double") - F.col("_prev_ts").cast("double")
+    expected = _x2(expected_freq)
+    thr = expected + (_x2(min_gap) if min_gap else 0)
     return (
-        prev.select(*group_cols, F.col(ts_col), F.col("_prev_ts"), delta.alias("_d"))
-        .where(F.col("_d") > expected_s + min_gap_s)
+        _steps(df, ts_col, group_cols)
+        .where(F.col("_du") * 2 > thr)
         .select(
             *group_cols,
             F.col("_prev_ts").alias("gap_start"),
             F.col(ts_col).alias("gap_end"),
-            F.col("_d").alias("gap_seconds"),
-            (F.floor(F.col("_d") / expected_s) - 1).cast("bigint").alias("expected_points"),
+            (F.col("_du") / 1e6).alias("gap_seconds"),
+            F.expr(f"_du * 2 div {expected} - 1").alias("expected_points"),
         )
     )
 
@@ -162,44 +210,37 @@ def find_gaps(
 def continuity_stats(
     df: DataFrame,
     ts_col: str,
-    expected_freq: str | int | float,
+    expected_freq: str | int | float | None,
     min_gap: str | int | float = 0,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """A3: min/max/count, total duration, summed gap time, coverage %.
 
     Coverage = 1 - (gap seconds / total span), as in reference
-    ``load_file.py:2102-2111``. Computed as two small aggregations (base +
-    gaps) joined driver-free; stays a DataFrame so it runs per-group.
+    ``load_file.py:2102-2111``. A gap is a step above expected + min_gap;
+    ``expected_freq=None`` infers the median step in the same action and
+    emits it as ``freq_seconds``. Stays a DataFrame so it runs per-group.
     """
-    base = df.groupBy(*group_cols).agg(
-        F.min(ts_col).alias("start_time"),
-        F.max(ts_col).alias("end_time"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    gaps = (
-        find_gaps(df, ts_col, expected_freq, min_gap, group_cols)
-        .groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n_gaps"),
-            # gap_seconds is a µs-precision epoch diff: the 6-dp cast is exact
-            exact_sum(F.col("gap_seconds")).alias("gap_seconds_total"),
-        )
-    )
-    joined = base.join(gaps, list(group_cols), "left") if group_cols else base.crossJoin(gaps)
-    span = F.col("end_time").cast("double") - F.col("start_time").cast("double")
-    gap_s = F.coalesce(F.col("gap_seconds_total"), F.lit(0.0))
-    return joined.select(
+    add = _x2(min_gap) if min_gap else 0
+    inferred = expected_freq is None
+    if inferred:
+        s = _stats(df, ts_col, group_cols, add, multiple=1)
+    else:
+        s = _stats(df, ts_col, group_cols, add + _x2(expected_freq))
+    span = F.unix_micros(F.col("end_time")) - F.unix_micros(F.col("start_time"))
+    extra = [(F.col("freq_us_x2") / 2e6).alias("freq_seconds")] if inferred else []
+    return s.select(
         *group_cols,
         "start_time",
         "end_time",
         "n_rows",
-        F.coalesce(F.col("n_gaps"), F.lit(0)).cast("bigint").alias("n_gaps"),
-        gap_s.alias("gap_seconds_total"),
-        span.alias("span_seconds"),
-        F.when(span > 0, (F.lit(1.0) - gap_s / span) * 100.0)
+        "n_gaps",
+        (F.col("gap_total_us") / 1e6).alias("gap_seconds_total"),
+        (span / 1e6).alias("span_seconds"),
+        F.when(span > 0, (F.lit(1.0) - F.col("gap_total_us") / span) * 100.0)
         .otherwise(F.lit(100.0))
         .alias("coverage_pct"),
+        *extra,
     )
 
 
@@ -216,28 +257,19 @@ def infer_frequency_us2(
     Emitting ``lower_mid + upper_mid`` keeps the statistic an exact
     integer in every engine (median = freq_us_x2 / 2; a "gap > K×median"
     test becomes ``2·Δus > K·freq_us_x2``). For odd counts it is simply
-    2× the middle element — no interpolation anywhere.
-
-    Why this exists (round-7): :func:`infer_frequency_seconds` uses the
-    engine's ``percentile``, whose even-count interpolation and float
-    output are engine-evaluated — the exact channel the r6 VERDICT
-    ordered out of the oracle-gated continuity slot. Order statistics
-    over integers are engine-proof.
+    2× the middle element — no interpolation anywhere. Order statistics
+    over integers are engine-proof, which is why the oracle-gated
+    continuity slot uses this form.
 
     Scale shape: deltas → groupBy(Δus) count (map-side combine; the
     distinct-delta frame is tiny for real telemetry, bounded by distinct
     spacings not rows) → cumulative count over the SMALL distinct frame
     (single-partition window over ~distinct-spacing rows, not data rows)
-    → the two rank probes are aggregations, no collect in the plan.
+    → the two rank probes are window aggregates, no collect in the plan.
+    A one-row series has no steps and a null frequency.
     """
-    slim = df.select(*group_cols, ts_col)
-    prev = _with_prev_ts(slim, ts_col, group_cols)
-    d_us = F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col("_prev_ts"))
-    deltas = prev.select(*group_cols, d_us.alias("_du")).where(
-        F.col("_du").isNotNull()
-    )
-    dd = deltas.groupBy(*group_cols, "_du").agg(F.count(F.lit(1)).alias("_c"))
-    return _median_us2(dd, group_cols)
+    f2 = _with_median(_distribution(df, ts_col, group_cols), group_cols)
+    return f2.groupBy(*group_cols).agg(F.min("freq_us_x2").alias("freq_us_x2"))
 
 
 def continuity_stats_exact(
@@ -248,18 +280,15 @@ def continuity_stats_exact(
     median_multiple: int = 10,
 ) -> DataFrame:
     """A3 continuity statistics, INTEGER-EXACT form — every output column
-    a BIGINT, no float computed anywhere in the plan (round-7 hardening;
-    semantics identical to :func:`continuity_stats` with
-    expected+min_gap = gap_threshold_us, which the float form expresses
-    as seconds).
+    a BIGINT, no float computed anywhere in the plan; the same statistics
+    body as :func:`continuity_stats` with expected+min_gap =
+    gap_threshold_us, which the float form expresses as seconds.
 
     ``gap_threshold_us=None`` infers the threshold from the data —
     gap ⇔ 2·Δus > ``median_multiple``·freq_us_x2 (i.e. Δ strictly above
     ``median_multiple``× the exact median spacing) — and emits the
-    inferred ``freq_us_x2`` as a column. The inference joins in as a
-    one-row broadcast scalar (no driver collect), so the whole statistic
-    is ONE action; with ``group_cols`` the per-group medians broadcast-
-    join on the key.
+    inferred ``freq_us_x2`` as a column. The inference rides in the same
+    aggregate (no driver collect), so the whole statistic is ONE action.
 
     Columns: ``start_us``/``end_us`` (epoch µs extrema), ``n_rows``,
     ``n_gaps``/``gap_total_us`` (deltas strictly above the threshold),
@@ -269,103 +298,18 @@ def continuity_stats_exact(
     exceeds span·1e4, safe to spans of ~29 years; remainder-based
     half-up, no engine division rounding in play).
     """
-    slim = df.select(*group_cols, ts_col)
-    prev = _with_prev_ts(slim, ts_col, group_cols)
-    d_us = F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col("_prev_ts"))
-    per = prev.select(*group_cols, F.unix_micros(F.col(ts_col)).alias("_us"), d_us.alias("_du"))
     auto = gap_threshold_us is None
     if auto:
-        # r14 (guide §2.4): the auto path previously called
-        # infer_frequency_us2(df) — a SECOND full _with_prev_ts lag
-        # pipeline over the same rows — and crossJoined its scalar into
-        # the row-sized frame to evaluate the gap flag per row. Every
-        # delta-derived statistic (n_gaps, gap_total_us, the median) is
-        # a function of the delta DISTRIBUTION alone, so one lag
-        # pipeline feeds a distinct-delta aggregate (tiny: bounded by
-        # distinct spacings, map-side combined) and the gap flag is
-        # evaluated on THAT frame; row-sized work is one lag pass plus
-        # one plain (min, max, count) aggregate. Degenerate-input
-        # semantics match the old form exactly: n_gaps is NULL when no
-        # deltas exist (sum over nothing), 0 when deltas exist but none
-        # gap; grouped mode still drops delta-less groups (inner join).
-        dd = (
-            per.where(F.col("_du").isNotNull())
-            .groupBy(*group_cols, "_du")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        # exact doubled-median from dd — infer_frequency_us2's order
-        # statistics, computed over the already-built distribution
-        med = _median_us2(dd, group_cols)
-        ddm = (
-            dd.join(F.broadcast(med), list(group_cols))
-            if group_cols
-            else dd.crossJoin(F.broadcast(med))
-        )
-        gap_cond = (F.col("_du") * 2) > (
-            F.col("freq_us_x2") * F.lit(int(median_multiple))
-        )
-        gaggs = [
-            F.sum(gap_cond.cast("long") * F.col("_c")).alias("n_gaps"),
-            F.coalesce(
-                F.sum(F.when(gap_cond, F.col("_du") * F.col("_c"))), F.lit(0)
-            ).alias("gap_total_us"),
-            F.min("freq_us_x2").alias("freq_us_x2"),
-        ]
-        gagg = ddm.groupBy(*group_cols).agg(*gaggs) if group_cols else ddm.agg(*gaggs)
-        saggs = [
-            F.min("_us").alias("start_us"),
-            F.max("_us").alias("end_us"),
-            F.count(F.lit(1)).alias("n_rows"),
-        ]
-        # min/max/count need no predecessor — aggregate the RAW slim
-        # frame (plain map-side-combined agg, no sort), not `per`, so
-        # the lag pipeline is evaluated exactly once (under dd)
-        us = slim.select(
-            *group_cols, F.unix_micros(F.col(ts_col)).alias("_us")
-        )
-        stats = us.groupBy(*group_cols).agg(*saggs) if group_cols else us.agg(*saggs)
-        base = (
-            stats.join(F.broadcast(gagg), list(group_cols))
-            if group_cols
-            else stats.crossJoin(F.broadcast(gagg))
-        )
-        # column order of the old fused aggregate
-        base = base.select(
-            *group_cols,
-            "start_us",
-            "end_us",
-            "n_rows",
-            "n_gaps",
-            "gap_total_us",
-            "freq_us_x2",
-        )
+        s = _stats(df, ts_col, group_cols, 0, multiple=median_multiple)
     else:
-        gap_cond = F.col("_du") > F.lit(int(gap_threshold_us))
-        gap = F.col("_du").isNotNull() & gap_cond
-        aggs = [
-            F.min("_us").alias("start_us"),
-            F.max("_us").alias("end_us"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(gap.cast("long")).alias("n_gaps"),
-            F.coalesce(F.sum(F.when(gap, F.col("_du"))), F.lit(0)).alias("gap_total_us"),
-        ]
-        base = per.groupBy(*group_cols).agg(*aggs) if group_cols else per.agg(*aggs)
-    span = F.col("end_us") - F.col("start_us")
-    num = span - F.col("gap_total_us")
+        s = _stats(df, ts_col, group_cols, 2 * int(gap_threshold_us))
+    extra = ["freq_us_x2"] if auto else []
+    kept = s.withColumn("start_us", F.unix_micros(F.col("start_time"))).withColumn(
+        "end_us", F.unix_micros(F.col("end_time"))
+    ).withColumn("span_us", F.col("end_us") - F.col("start_us"))
     # coverage micro-pct by exact integer split division: two 1e4-digit
     # groups of num*1e8/span; half-up via the final remainder
-    extra = ["freq_us_x2"] if auto else []
-    kept = base.select(
-        *group_cols,
-        "start_us",
-        "end_us",
-        "n_rows",
-        F.col("n_gaps").cast("long").alias("n_gaps"),
-        F.col("gap_total_us").cast("long").alias("gap_total_us"),
-        span.cast("long").alias("span_us"),
-        *extra,
-        num.cast("long").alias("_num"),
-    )
+    num = "(span_us - gap_total_us)"
     return kept.select(
         *group_cols,
         "start_us",
@@ -378,12 +322,12 @@ def continuity_stats_exact(
         F.when(
             F.col("span_us") > 0,
             F.expr(
-                "(_num * 10000) div span_us * 10000"
-                " + (_num * 10000 % span_us) * 10000 div span_us"
-                " + CAST(2 * ((_num * 10000 % span_us) * 10000 % span_us) >= span_us AS BIGINT)"
+                f"({num} * 10000) div span_us * 10000"
+                f" + ({num} * 10000 % span_us) * 10000 div span_us"
+                f" + CAST(2 * (({num} * 10000 % span_us) * 10000 % span_us) >= span_us AS BIGINT)"
             ),
         )
         .otherwise(F.lit(100_000_000))
         .cast("long")
         .alias("coverage_micropct"),
-    ).drop("_num")
+    )

@@ -204,15 +204,19 @@ class TimeSeriesLoader:
         memory percentile sketch — pass it when the series is huge."""
         df = self.get_dataframe()
         ts = self._ts_col(time_column)
-        if expected_frequency is None:
-            freq_s = infer_frequency_seconds(df, ts, exact=exact).collect()[0][0]
-        else:
+        freq_s = None
+        if expected_frequency is not None:
             from time_series_loader_spark.functions.frequency import freq_to_seconds
 
             freq_s = freq_to_seconds(expected_frequency)
-        gaps_df = find_gaps(df, ts, freq_s, min_gap_size)
+        elif not exact:
+            freq_s = infer_frequency_seconds(df, ts, exact=False).collect()[0][0]
+        # with no frequency given, the statistics infer the exact median
+        # in their own action and return it as freq_seconds
         stats_row = continuity_stats(df, ts, freq_s, min_gap_size).collect()[0]
-        gaps = gaps_df.collect()
+        if freq_s is None:
+            freq_s = stats_row["freq_seconds"]
+        gaps = find_gaps(df, ts, freq_s, min_gap_size).collect()
         self._analysis = {
             "time_column": ts,
             "inferred_frequency_seconds": float(freq_s),
