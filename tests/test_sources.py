@@ -1,5 +1,6 @@
 """F1/F2/F5 source-layer tests: discovery, metadata, validation, CSV load."""
 
+import contextlib
 from datetime import datetime, timedelta
 
 import pytest
@@ -10,10 +11,15 @@ from time_series_loader_spark.config import (
     TimeSeriesConfig,
     ValidationStrategy,
 )
+from time_series_loader_spark.plans.loader import TimeSeriesLoader
+from time_series_loader_spark.session import scoped_conf
 from time_series_loader_spark.sources.csv import (
     clean_column_name,
+    header_schema,
     load_csv_timeseries,
+    load_csv_with_bad_records,
     read_header,
+    type_columns,
     validate_headers,
 )
 from time_series_loader_spark.sources.discovery import discover_files
@@ -175,3 +181,103 @@ class TestCsvLoad:
             spark, [f1], LoadingConfig(timestamp_column="t", coerce_numeric=False)
         )
         assert dict(df.dtypes)["v"] == "string"
+
+
+# (first line, data line, LoadingConfig kwargs): header shapes where Spark's
+# own naming differs from the raw text, plus options that change parsing
+HEADER_CASES = {
+    "utf8_bom": ("\ufeffa;b", "1;2", {}),
+    "empty_field": ("a;;c", "1;2;3", {}),
+    "case_duplicates": ("val;VAL;x", "1;2;3", {}),
+    "no_header": ("1;2;3", "4;5;6", {"header": False}),
+    "decimal_comma": ("a;b", "1,5;2,25", {"decimal": ","}),
+    "quoted_delimiter": ('"a;b";c', "1;2", {}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_header_schema_matches_spark_inference(spark, tmp_path, case):
+    first, data, kw = HEADER_CASES[case]
+    paths = [_write(tmp_path / f"{i}.csv", f"{first}\n{data}\n") for i in range(2)]
+    loading = LoadingConfig(add_lineage=False, **kw)
+    got = load_csv_timeseries(spark, paths, loading)
+    inferred = (
+        spark.read.option("header", str(loading.header).lower())
+        .option("sep", loading.delimiter)
+        .csv(paths)
+    )
+    want, _ = type_columns(inferred, loading)
+    assert got.columns == want.columns
+    assert got.dtypes == want.dtypes
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_header_schema_case_sensitive_keeps_case_variants():
+    names = [f.name for f in header_schema(["v", "V", "v", ""], True, True).fields]
+    assert names == ["v0", "V", "v2", "_c3"]
+
+
+def test_initialize_starts_no_spark_job(spark, tmp_path):
+    # above the 32-path threshold at which Spark lists files with a job
+    paths = [
+        _write(tmp_path / f"s{i:03d}.csv", f"Time;v\n01/01/2023 {i % 24:02d}:00;{i}\n")
+        for i in range(240)
+    ]
+    sc = spark.sparkContext
+
+    def jobs_in(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    loader = TimeSeriesLoader.from_files(spark, paths)
+    assert jobs_in("tsl-initialize", loader.initialize) == []
+    assert loader.valid_paths == paths
+    # the count is not vacuous: an action under a group is seen
+    assert jobs_in("tsl-action", spark.range(1).count)
+
+
+LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    spark.conf.set("spark.tsl.test.set", "before")
+    try:
+        for fail in (False, True):
+            with pytest.raises(RuntimeError) if fail else contextlib.nullcontext():
+                pin = {"spark.tsl.test.set": "in", "spark.tsl.test.unset": "in"}
+                with scoped_conf(spark, pin):
+                    assert spark.conf.get("spark.tsl.test.set") == "in"
+                    assert spark.conf.get("spark.tsl.test.unset") == "in"
+                    if fail:
+                        raise RuntimeError("read failed")
+            assert spark.conf.get("spark.tsl.test.set") == "before"
+            assert spark.conf.get("spark.tsl.test.unset", None) is None
+    finally:
+        spark.conf.unset("spark.tsl.test.set")
+
+
+def test_reads_restore_listing_threshold(spark, tmp_path):
+    ok = _write(tmp_path / "a.csv", "v;t\n1;2\n")
+    missing = str(tmp_path / "missing.csv")
+    prior = spark.conf.get(LISTING, None)
+    try:
+        for before in ("7", None):
+            if before is None:
+                spark.conf.unset(LISTING)
+            else:
+                spark.conf.set(LISTING, before)
+            load_csv_timeseries(spark, [ok], LoadingConfig())
+            assert spark.conf.get(LISTING, None) == before
+            with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+                load_csv_with_bad_records(spark, [missing], "v STRING, t STRING")
+            assert spark.conf.get(LISTING, None) == before
+    finally:
+        if prior is None:
+            spark.conf.unset(LISTING)
+        else:
+            spark.conf.set(LISTING, prior)

@@ -161,12 +161,13 @@ class TimeSeriesLoader:
             ok_paths = paths  # typed formats: Spark enforces schema merge
         self.valid_paths = ok_paths
 
+        ok = set(ok_paths)
         df = load_csv_timeseries(
             self.spark,
             ok_paths,
             self.loading,
             self.naming,
-            metas=[m for m in self.metas if m.filepath in set(ok_paths)],
+            metas=[m for m in self.metas if m.filepath in ok],
         )
         df = apply_hooks(df, self.hooks, context={}, ledger=self.ledger)
         self.dataframe = df

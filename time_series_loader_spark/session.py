@@ -16,6 +16,8 @@ data (or leave AQE to coalesce).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -35,6 +37,24 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` sized to the box: min(24g, 60% of MemTotal).
+
+    In local mode the driver JVM is also the executor, so a fixed 24g heap
+    can outgrow a smaller machine and be OOM-killed. 24g where
+    ``/proc/meminfo`` is unreadable.
+    """
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mb, int(line.split()[1]) * 6 // 10 // 1024)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
 
 
 def get_spark(
@@ -59,7 +79,8 @@ def get_spark(
     conf = {
         # local mode: driver JVM IS the executor — size it for the machine
         # (only effective at JVM launch; harmless if session already exists)
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _default_driver_memory(),
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -108,42 +129,49 @@ def normalize_timestamps(df):
     return df
 
 
-_READ_CONFS = (
+_READ_CONFS = {
     # TIMESTAMP(NANOS) → bigint instead of an illegal-type error
-    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # naive TIMESTAMP(MICROS) → TimestampType directly (no cast node);
     # normalize_timestamps below stays as the fallback
-    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-)
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver parquet table, normalizing timestamp physical types.
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the ``with`` body only, then restore each key
+    to its prior value — or unset it if it was unset — even on error.
 
-    The two parquet confs are pinned only around the ``spark.read`` call
-    (schema conversion happens there; execution uses the schema baked into
-    the plan — verified with a NANOS file) and restored after, so reading
-    a table does not silently change parquet semantics for unrelated
-    subsequent reads in a shared session. Neither conf is honored as a
-    per-DataFrameReader option, or this would be scoped that way.
+    For confs that Spark reads while a DataFrame is being *defined* (file
+    listing, schema conversion) or a query *started*, so scoping them to
+    that call changes nothing for unrelated work in a shared session.
     """
-    from pyspark.sql import functions as F
-
-    prev: dict[str, str | None] = {}
-    for k, v in _READ_CONFS:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
         spark.conf.set(k, v)
     try:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        yield
     finally:
         for k, old in prev.items():
             if old is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str):
+    """Read one driver parquet table, normalizing timestamp physical types.
+
+    The two parquet confs are scoped to the ``spark.read`` call (schema
+    conversion happens there; execution uses the schema baked into the
+    plan — verified with a NANOS file). Neither conf is honored as a
+    per-DataFrameReader option, or this would be scoped that way.
+    """
+    from pyspark.sql import functions as F
+
+    with scoped_conf(spark, _READ_CONFS):
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for c in _NANO_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(c) == "bigint":
             # integer DIV keeps full precision (double division would not)

@@ -7,33 +7,39 @@ Parity targets:
   1782-1806``. Here: ONE ``spark.read.csv(paths)`` — Spark parallelizes
   splits natively; no sequential loop, no per-file materialization.
 - first-file schema freeze + congruence rejection → reference
-  ``load_file.py:1489-1531``. Here: infer the schema from the first file
-  (driver-side mini-read), then validate every other file's header against
-  it BEFORE the big read; mismatching files raise (or are skipped,
-  returning them as rejects).
-- header-only scan (S5) → reference ``load_file.py:1696-1766`` —
-  ``spark.read...limit(0)`` on the first file.
+  ``load_file.py:1489-1531``. Here: the first file's raw header is the
+  contract; every other file's header is checked against it BEFORE the
+  big read, and mismatching files are returned as rejects.
+- header-only scan (S5) → reference ``load_file.py:1696-1766``. Here:
+  :func:`read_header` reads one line on the driver, and the read gets
+  that header as an all-string schema (:func:`header_schema`), so Spark
+  runs no inference job.
 - numeric coercion (P1) → ``try_cast`` to double: exact
   ``pd.to_numeric(errors='coerce')`` semantics (null on failure).
 - lineage (P2) → ``input_file_name()`` + broadcast join to the filename-
   metadata DF for ``file_start_time``/``file_end_time``.
 
-Scale: file listing and header checks are driver-side over the path list;
-data IO is one distributed scan. Column pruning and filter pushdown apply
-to the scan as usual (header validation reads ~1 line per file).
+Scale: file listing and header checks are driver-side over the path list
+(the read lists the same paths serially on the driver, not with a
+distributed listing job); data IO is one distributed scan. Defining the
+DataFrame starts no Spark job. Column pruning and filter pushdown apply to
+the scan as usual (header validation reads ~1 line per file).
 """
 
 from __future__ import annotations
 
 import codecs
 import csv as _csv
+from collections import Counter
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from time_series_loader_spark.config import ColumnNamingConfig, LoadingConfig
 from time_series_loader_spark.functions.timeparse import parse_timestamp_multi
+from time_series_loader_spark.session import scoped_conf
 from time_series_loader_spark.sources.metadata import FileMeta, metadata_dataframe
 
 
@@ -51,6 +57,33 @@ def read_header(path: str, delimiter: str = ";", encoding: str = "utf-8") -> lis
             return next(reader)
         except StopIteration:
             return []
+
+
+def header_schema(
+    first_row: Sequence[str], header: bool, case_sensitive: bool
+) -> StructType:
+    """The all-string schema Spark's CSV reader infers (``inferSchema``
+    off) from ``first_row``, named by Spark's own header rules: ``_c{i}``
+    without a header or for an empty field, ``name{i}`` for a name that
+    repeats (compared case-insensitively unless ``case_sensitive``)."""
+    fold = (lambda n: n) if case_sensitive else str.lower
+    repeats = {k for k, n in Counter(fold(v) for v in first_row).items() if n > 1}
+    names = [
+        f"_c{i}" if not header or not v else f"{v}{i}" if fold(v) in repeats else v
+        for i, v in enumerate(first_row)
+    ]
+    return StructType([StructField(n, StringType()) for n in names])
+
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _driver_listing(spark: SparkSession, paths: Sequence[str]) -> dict[str, str]:
+    """Conf that keeps the read's file listing on the driver: above the
+    threshold (32 paths by default) Spark lists with a distributed job of
+    one task per path, for paths discovery has already stat'd."""
+    threshold = int(spark.conf.get(_LISTING_THRESHOLD))
+    return {_LISTING_THRESHOLD: str(max(threshold, len(paths)))}
 
 
 def validate_headers(
@@ -160,14 +193,15 @@ def load_csv_with_bad_records(
     appended automatically.
     """
     full_schema = f"{schema}, {corrupt_col} STRING"
-    return (
-        spark.read.option("header", str(header).lower())
-        .option("sep", delimiter)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .schema(full_schema)
-        .csv(list(paths))
-    )
+    with scoped_conf(spark, _driver_listing(spark, paths)):
+        return (
+            spark.read.option("header", str(header).lower())
+            .option("sep", delimiter)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", corrupt_col)
+            .schema(full_schema)
+            .csv(list(paths))
+        )
 
 
 def load_csv_timeseries(
@@ -180,26 +214,40 @@ def load_csv_timeseries(
     """One lazy plan: scan all conforming files → clean names → parse
     timestamp(s) → coerce numerics → lineage → global time sort.
 
-    Returns the composed DataFrame; nothing is materialized here.
+    Returns the composed DataFrame; for CSV nothing runs here — the
+    columns come from the first file's header (the contract), not from
+    an inference job.
     """
     naming = naming or ColumnNamingConfig()
     fmt = getattr(loading, "format", "csv")
-    if fmt == "csv":
-        reader = (
-            spark.read.option("header", str(loading.header).lower())
-            .option("sep", loading.delimiter)
-            .option("encoding", loading.encoding)
-            .option("mode", "PERMISSIVE")
-        )
-        # All columns read as string; typing is explicit below so coercion
-        # semantics (null-on-failure) are ours, not the CSV inferrer's.
-        df = reader.csv(list(paths))
-    elif fmt == "parquet":
-        df = spark.read.parquet(*paths)
-    elif fmt == "json":
-        df = spark.read.option("mode", "PERMISSIVE").json(list(paths))
-    else:
+    if fmt not in ("csv", "parquet", "json"):
         raise ValueError(f"unsupported format {fmt!r}; use csv|parquet|json")
+    with scoped_conf(spark, _driver_listing(spark, paths)):
+        if fmt == "csv":
+            reader = (
+                spark.read.option("header", str(loading.header).lower())
+                .option("sep", loading.delimiter)
+                .option("encoding", loading.encoding)
+                .option("mode", "PERMISSIVE")
+            )
+            # All columns read as string; typing is explicit below so
+            # coercion semantics (null-on-failure) are ours. A blank first
+            # line leaves naming to Spark's inference.
+            first = (
+                read_header(paths[0], loading.delimiter, loading.encoding)
+                if paths
+                else []
+            )
+            if "".join(first).strip():
+                case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+                reader = reader.schema(
+                    header_schema(first, loading.header, case_sensitive)
+                )
+            df = reader.csv(list(paths))
+        elif fmt == "parquet":
+            df = spark.read.parquet(*paths)
+        else:
+            df = spark.read.option("mode", "PERMISSIVE").json(list(paths))
 
     renamed = df.toDF(*[clean_column_name(c, naming) for c in df.columns])
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from time_series_loader_spark.functions.exact import exact_count, exact_mean, exact_sum
+from time_series_loader_spark.session import scoped_conf
 
 
 def file_as_stream_dir(path: str) -> str:
@@ -189,11 +190,10 @@ def run_available_now(
     ``test_streaming.test_stateful_gap_detector_restart_recovery`` does.
     """
     name = f"tsl_stream_{uuid.uuid4().hex[:12]}"
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key) if shuffle_partitions is not None else None
+    pin = {}
     if shuffle_partitions is not None:
-        spark.conf.set(key, str(shuffle_partitions))
-    try:
+        pin["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    with scoped_conf(spark, pin):
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -202,9 +202,6 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
     # Copy the drained rows out of the memory sink, then DROP the sink
     # table: the sink holds every emitted row on the driver for the rest
     # of the session, so repeated drains (bench loops, long notebook

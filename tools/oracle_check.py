@@ -52,14 +52,20 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # a run that names no real slot would check nothing and pass
+        print(f"unknown slot name(s): {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -94,15 +100,17 @@ def main() -> int:
                 diff = [(a, b) for a, b in zip(ls, ld) if a != b][:3]
                 for a, b in diff:
                     print(f"    spark : {a}\n    duckdb: {b}")
+        checked += 1
         status = "OK " if not problems else "FAIL"
         print(f"{name:32s} {status} rows={len(srows):6d} spark={t_spark:5.1f}s duck={t_duck:5.1f}s "
               + ("; ".join(problems)))
         if problems:
             failures.append(name)
+    print(f"\nchecked {checked} slot(s) against the oracle")
     if failures:
-        print(f"\nFAILURES: {failures}")
+        print(f"FAILURES: {failures}")
         return 1
-    print("\nall queries match")
+    print("all queries match")
     return 0
 
 
